@@ -4,7 +4,12 @@ given scale factor, then execute each oracle_sql.json query in DuckDB over
 the same parquet tables and compare against the Spark result parquet
 (columns sorted by name, rows in emitted order, values normalized).
 
-Usage: python3 local_oracle_check.py [sfDir] [outDir]
+Usage: python3 local_oracle_check.py [sfDir] [outDir] [names] [--no-run]
+
+`names` (optional) is a comma-separated list of gate-name substrings,
+passed through to graft.Verify's own filter: only matching gates run and
+are compared (e.g. `sim2,sim3,st1` while iterating on the index
+lifecycle). Acceptance runs omit it and cover every gate.
 """
 import json
 import math
@@ -16,13 +21,20 @@ import pandas as pd
 
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 OUT = sys.argv[2] if len(sys.argv) > 2 else "/tmp/graft-verify-out"
+ONLY = (sys.argv[3].split(",")
+        if len(sys.argv) > 3 and not sys.argv[3].startswith("--") else None)
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
 
 
+def selected(name: str) -> bool:
+    return ONLY is None or any(o in name for o in ONLY)
+
+
 def run_verify():
     r = subprocess.run(
-        ["sbt", "-batch", f"runMain graft.Verify {SF} {OUT}"],
+        ["sbt", "-batch", f"runMain graft.Verify {SF} {OUT}"
+         + (f" {','.join(ONLY)}" if ONLY else "")],
         capture_output=True, text=True, timeout=1800)
     for line in r.stdout.splitlines():
         if "[verify]" in line or "error]" in line.lower():
@@ -80,7 +92,8 @@ def main():
     con = duckdb.connect()
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{SF}/{t}.parquet'")
-    oracles = json.load(open(f"{OUT}/oracle_sql.json"))
+    oracles = {k: v for k, v in json.load(open(f"{OUT}/oracle_sql.json")).items()
+               if selected(k)}
     n_ok = 0
     for name in sorted(oracles):
         res = compare(name, oracles[name], con)
@@ -91,7 +104,7 @@ def main():
     import os
     for d in sorted(os.listdir(OUT)):
         full = f"{OUT}/{d}"
-        if os.path.isdir(full) and d not in oracles:
+        if os.path.isdir(full) and d not in oracles and selected(d):
             try:
                 n = len(pd.read_parquet(full))
                 print(f"{'PASS' if n > 0 else 'FAIL'} {d}: rows-only n={n}")

@@ -596,8 +596,9 @@ object Dedup {
     while (!converged && i < maxIter) {
       // the round's edge count rides the checkpoint job's own observed
       // metrics (r21) — the separate count() job per round is gone;
-      // ObserveProbe pins that eager localCheckpoint/checkpoint actions
-      // deliver observe() metrics
+      // CCPropSpec "observe() metrics ride eager checkpoints" pins that
+      // eager localCheckpoint/checkpoint actions deliver them (on a
+      // bounded wait — a broken mechanism would hang obs.get here)
       val obs = org.apache.spark.sql.Observation()
       val next = cp(smallStar(largeStar(e))
         .observe(obs, count(lit(1)).as("_n")))
@@ -1215,7 +1216,9 @@ object Dedup {
     * `<path>.__next`, the live tree steps aside to `<path>.__pre`,
     * next renames in, pre deletes last — an interrupted run leaves
     * `__pre` (the previous registry, intact) and the next attempt
-    * refuses with the restore path named rather than guessing.
+    * refuses with the restore path named rather than guessing; a
+    * delete of `__pre` that fails raises, naming it, with the new
+    * registry already live.
     *
     * The deleted registry is value-IDENTICAL to one rebuilt from the
     * survivors (the sim27 contract): banding is a pure per-row
@@ -1230,8 +1233,6 @@ object Dedup {
                                 tombstones: DataFrame,
                                 numBuckets: Int = 32): Unit = {
     val reg = spark.table(table)
-    val idName = reg.columns.head
-    val tCol = tombstones.columns.head
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val pre = new org.apache.hadoop.fs.Path(s"$path.__pre")
@@ -1239,13 +1240,8 @@ object Dedup {
       s"interrupted registry deletion: $pre still holds the previous " +
         s"registry — restore it to $path (or delete it if the swap " +
         "completed) before deleting again")
-    val survivors = reg.join(
-      broadcast(tombstones
-        .select(Similarity.castTombstone(col(tCol),
-          reg.schema(idName).dataType,
-          "deleteFromHammingRegistry").as(idName))
-        .distinct()),
-      Seq(idName), "left_anti")
+    val survivors = Similarity.dropTombstoned(reg, reg.columns.head,
+      tombstones, "deleteFromHammingRegistry")
     val next = s"$path.__next"
     Bucketing.rewriteBucketedAt(survivors, s"${table}_next",
       Seq("band", "bv"), numBuckets, next)
@@ -1256,9 +1252,14 @@ object Dedup {
     require(fs.rename(live, pre), s"rename $path -> $pre failed")
     require(fs.rename(new org.apache.hadoop.fs.Path(next), live),
       s"rename $next -> $path failed ($pre holds the previous registry)")
-    fs.delete(pre, true)
     Bucketing.registerBucketedAt(spark, table, schemaDdl,
       Seq("band", "bv"), numBuckets, path)
+    // a failed delete must raise: a silent one leaves __pre behind and
+    // the guard above then refuses every later deletion
+    if (!fs.delete(pre, true))
+      sys.error(s"deleteFromHammingRegistry: swap COMPLETED but the " +
+        s"superseded registry at $pre could not be deleted — delete it " +
+        "manually to unblock later deletions (the live registry is intact)")
   }
 
   /** Typo-pair detection over a token vocabulary (the fuzzy-key-matching
@@ -1448,10 +1449,9 @@ object Dedup {
     // a flag exists. Pass twoLevelAutoK = Int.MaxValue to force the
     // exact path at any k. Gates run k=16 (exact) and the dd18 gate
     // pins the two-level path explicitly.
-    if (!twoLevelAssign && k >= twoLevelAutoK)
-      Similarity.warnAutoTwoLevel("semanticDedup", k, twoLevelAutoK)
     val assigned =
-      if (twoLevelAssign || k >= twoLevelAutoK)
+      if (Similarity.twoLevelEngaged("semanticDedup", twoLevelAssign, k,
+          twoLevelAutoK))
         Clustering.assignToSeedsTwoLevel(emb, k, idCol, vecCol)
       else Clustering.assignToSeeds(emb, k, idCol, vecCol)
     val e = emb.select(col(idCol).as("_id"), decV(col(vecCol)).as("_x"))

@@ -48,20 +48,27 @@ object Similarity {
 
   private lazy val logger = org.slf4j.LoggerFactory.getLogger(getClass)
 
-  /** One-line runtime signal when the two-level path engages via the
-    * AUTO threshold rather than the explicit flag: the switch changes
-    * results (approximate assignment, ~0.06–0.10 measured recall drop
-    * vs exact at the rehearsal scales), and a caller crossing the
-    * threshold by growing nlist/k should learn that from the log, not
-    * from silently different output.
+  /** Whether the two-level assignment runs: the `explicit` flag, or
+    * the self-engaging big-corpus switch at `n ≥ threshold` (nlist or k
+    * scales with the corpus, so the exact assignment turns quadratic —
+    * the measured 497 s / 869 s walls, SCALE.md; `Int.MaxValue`
+    * disarms). An AUTO engagement logs one WARN line: the switch
+    * changes results (approximate assignment, ~0.06–0.10 measured
+    * recall drop vs exact at the rehearsal scales), and a caller
+    * crossing the threshold should learn that from the log, not from
+    * silently different output.
     */
-  private[operators] def warnAutoTwoLevel(site: String, n: Long,
-                                          threshold: Int): Unit =
-    logger.warn(s"graft $site: two-level assignment AUTO-ENGAGED " +
-      s"($n >= $threshold): assignment is approximate (~0.06-0.10 " +
-      "measured recall cost vs exact) and kills the quadratic " +
-      "exact-assign wall. Pass twoLevelAssign = true to acknowledge, " +
-      "or threshold Int.MaxValue to force exact assignment.")
+  private[operators] def twoLevelEngaged(site: String, explicit: Boolean,
+                                         n: Long, threshold: Int): Boolean = {
+    val on = explicit || n >= threshold
+    if (on && !explicit)
+      logger.warn(s"graft $site: two-level assignment AUTO-ENGAGED " +
+        s"($n >= $threshold): assignment is approximate (~0.06-0.10 " +
+        "measured recall cost vs exact) and kills the quadratic " +
+        "exact-assign wall. Pass twoLevelAssign = true to acknowledge, " +
+        "or threshold Int.MaxValue to force exact assignment.")
+    on
+  }
 
   /** One-pass cosine similarity between two float/double arrays —
     * served by the compiled [[graft.functions.VecKernels.vec_dot_d]]
@@ -122,14 +129,7 @@ object Similarity {
     // carries ≤ k pairs per (query × partition) — bounded by k at any
     // corpus size. Ties (score, then cid asc) identical to the window's
     // orderBy(sim.desc, cid), so output rows are unchanged.
-    scoredPairs(queries, candidates, idCol, vecCol, exact)
-      .groupBy("qid")
-      .agg(TopKAgg.top_k(col("sim"), col("cid"), k, ascending = false)
-        .as("_tk"))
-      .select(col("qid"), posexplode(col("_tk")))
-      .select(col("qid"), col("col.id").as("cid"), col("col.score").as("sim"),
-        (col("pos") + 1).cast(LongType).as("rank"))
-      .orderBy("qid", "rank")
+    presentTopK(scoredPairs(queries, candidates, idCol, vecCol, exact), k)
   }
 
   /** All (query, candidate) cosine scores as (qid, cid, sim) — the
@@ -145,15 +145,13 @@ object Similarity {
     requireIntegralIds(queries, candidates, idCol)
     import graft.functions.VecKernels.{vec_dot_d, vec_dot_dec}
     def dec(c: Column) = graft.functions.VecKernels.to_dec6(c)
-    def dbl(c: Column) = graft.functions.VecKernels.to_double(c) // compiled cast kernel (r21): same values as the interpreted
-    // transform(cast) per element, one call per row
 
     def side(df: DataFrame, id: String, v: String, n: String): DataFrame =
       if (exact)
         df.select(col(idCol).cast(LongType).as(id), dec(col(vecCol)).as(v))
           .withColumn(n, vec_dot_dec(col(v), col(v)).cast(DoubleType))
       else
-        df.select(col(idCol).cast(LongType).as(id), dbl(col(vecCol)).as(v))
+        df.select(col(idCol).cast(LongType).as(id), ivfDbl(col(vecCol)).as(v))
           .withColumn(n, sqrt(vec_dot_d(col(v), col(v))))
 
     val q = side(queries, "qid", "qv", "qn")
@@ -274,22 +272,14 @@ object Similarity {
              idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     requireIntegralIds(queries, candidates, idCol)
     import graft.functions.VecKernels.vec_sqdist_d
-    def dbl(c: Column) = graft.functions.VecKernels.to_double(c) // compiled cast kernel (r21): same values as the interpreted
-    // transform(cast) per element, one call per row
-    val q = queries.select(col(idCol).cast(LongType).as("qid"), dbl(col(vecCol)).as("qv"))
-    val c = candidates.select(col(idCol).as("cid"), dbl(col(vecCol)).as("cv"))
+    val q = queries.select(col(idCol).cast(LongType).as("qid"), ivfDbl(col(vecCol)).as("qv"))
+    val c = candidates.select(col(idCol).as("cid"), ivfDbl(col(vecCol)).as("cv"))
     // bounded map-side top-k (see cosineTopK): ascending — smallest
     // distance first; ties by cid match the window's orderBy(dist, cid)
-    c.join(broadcast(q), col("qid") =!= col("cid"))
+    presentTopK(c.join(broadcast(q), col("qid") =!= col("cid"))
       .select(col("qid"), col("cid").cast(LongType).as("cid"),
-        vec_sqdist_d(col("qv"), col("cv")).as("dist"))
-      .groupBy("qid")
-      .agg(TopKAgg.top_k(col("dist"), col("cid"), k, ascending = true)
-        .as("_tk"))
-      .select(col("qid"), posexplode(col("_tk")))
-      .select(col("qid"), col("col.id").as("cid"), col("col.score").as("dist"),
-        (col("pos") + 1).cast(LongType).as("rank"))
-      .orderBy("qid", "rank")
+        vec_sqdist_d(col("qv"), col("cv")).as("dist")), k, "dist",
+      ascending = true)
   }
 
   /** (pos, subvector) rows for the `m` PQ subspaces of `v`. Sub `s`
@@ -412,13 +402,11 @@ object Similarity {
       "need m >= 1, codes >= 2, shortlist >= k")
     requireIntegralIds(queries, candidates, idCol)
     import graft.functions.VecKernels.vec_sqdist_d
-    def dbl(c: Column) = graft.functions.VecKernels.to_double(c) // compiled cast kernel (r21): same values as the interpreted
-    // transform(cast) per element, one call per row
     def l2(a: Column, b: Column) = vec_sqdist_d(a, b)
     def subSplit(v: Column): Column = subSplitExplode(v, m)
 
-    val cand = candidates.select(col(idCol).as("cid"), dbl(col(vecCol)).as("cv"))
-    val q = queries.select(col(idCol).cast(LongType).as("qid"), dbl(col(vecCol)).as("qv"))
+    val cand = candidates.select(col(idCol).as("cid"), ivfDbl(col(vecCol)).as("cv"))
+    val q = queries.select(col(idCol).cast(LongType).as("qid"), ivfDbl(col(vecCol)).as("qv"))
 
     // deterministic per-subspace codebook from real corpus vectors
     val seedIds = candidates
@@ -426,7 +414,7 @@ object Similarity {
       .agg(min(col(idCol)).as("_sid"))
     val seedCents = candidates
       .join(broadcast(seedIds), col(idCol) === col("_sid"))
-      .select(col("_code"), subSplit(dbl(col(vecCol))))
+      .select(col("_code"), subSplit(ivfDbl(col(vecCol))))
       .withColumnRenamed("pos", "sub").withColumnRenamed("col", "cvec")
     val cents = refineCodebook(seedCents, cand.select(col("cid"),
       subSplit(col("cv"))).withColumnRenamed("pos", "sub")
@@ -464,29 +452,16 @@ object Similarity {
     // sum itself stays summation-order-independent, and the exact
     // re-rank below bounds the effect to recall, never to ordering of
     // the final k). Still deterministic run-to-run.
-    val short = encoded.join(broadcast(adc), Seq("sub", "_code"))
-      .groupBy(col("qid"), col("cid")).agg(sum(col("_d")).as("adc_dist"))
-      .filter(col("qid") =!= col("cid"))
-      .groupBy(col("qid"))
-      .agg(TopKAgg.top_k(col("adc_dist").cast(DoubleType),
-        col("cid").cast(LongType), shortlist, ascending = true).as("_tk"))
-      .select(col("qid"), explode(col("_tk")).as("_e"))
-      .select(col("qid"), col("_e.id").as("cid"))
+    val short = adcShortlist(encoded.join(broadcast(adc), Seq("sub", "_code")),
+      shortlist)
 
     // exact re-rank of the shortlist — same bounded-aggregate shape
     // (≤ shortlist rows per query feed it, but zero windows keeps the
     // whole plan in the bounded-exchange regime PlanSpec pins)
-    short
+    presentTopK(short
       .join(broadcast(q), "qid").join(cand, "cid")
       .select(col("qid"), col("cid").cast(LongType).as("cid"),
-        l2(col("qv"), col("cv")).as("dist"))
-      .groupBy(col("qid"))
-      .agg(TopKAgg.top_k(col("dist"), col("cid"), k, ascending = true)
-        .as("_tk"))
-      .select(col("qid"), posexplode(col("_tk")))
-      .select(col("qid"), col("col.id").as("cid"), col("col.score").as("dist"),
-        (col("pos") + 1).cast(LongType).as("rank"))
-      .orderBy("qid", "rank")
+        l2(col("qv"), col("cv")).as("dist")), k, "dist", ascending = true)
   }
 
   /** IVF-PQ — the composed architecture production vector stores ship:
@@ -527,13 +502,10 @@ object Similarity {
                 idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     require(nprobe >= 1 && nprobe <= nlist && shortlist >= k,
       "need 1 <= nprobe <= nlist and shortlist >= k")
-    // self-engaging big-corpus switch, same rationale and default as
-    // ivfTopK's twoLevelAutoNlist (nlist ∝ N makes the exact candidate
-    // assignment quadratic — measured 869 s vs 179 s two-level at the
-    // 100× rehearsal, SCALE.md r17); Int.MaxValue disarms
-    val twoLevel = twoLevelAssign || nlist >= twoLevelAutoNlist
-    if (!twoLevelAssign && twoLevel)
-      warnAutoTwoLevel("ivfPqTopK", nlist, twoLevelAutoNlist)
+    // self-engaging past twoLevelAutoNlist, as in ivfTopK (measured
+    // 869 s exact vs 179 s two-level at the 100× rehearsal)
+    val twoLevel = twoLevelEngaged("ivfPqTopK", twoLevelAssign, nlist,
+      twoLevelAutoNlist)
     ivfPqSearch(queries,
       ivfPqBuild(candidates, nlist, m, codes, refineIters, twoLevel,
         twoLevelAutoNlist, idCol, vecCol),
@@ -595,15 +567,11 @@ object Similarity {
                  idCol: String = "vec_id",
                  vecCol: String = "embedding"): IvfPqIndex = {
     requireIntegralId(candidates, idCol)
-    // self-engaging big-corpus switch; Int.MaxValue disarms (ivfTopK doc)
-    val twoLevel = twoLevelAssign || nlist >= twoLevelAutoNlist
-    if (!twoLevelAssign && twoLevel)
-      warnAutoTwoLevel("ivfPqBuild", nlist, twoLevelAutoNlist)
-    def dbl(c: Column) = graft.functions.VecKernels.to_double(c) // compiled cast kernel (r21): same values as the interpreted
-    // transform(cast) per element, one call per row
+    val twoLevel = twoLevelEngaged("ivfPqBuild", twoLevelAssign, nlist,
+      twoLevelAutoNlist)
     def subSplit(v: Column): Column = subSplitExplode(v, m)
 
-    val cand = candidates.select(col(idCol).as("cid"), dbl(col(vecCol)).as("cv"))
+    val cand = candidates.select(col(idCol).as("cid"), ivfDbl(col(vecCol)).as("cv"))
 
     // coarse cells: nlist corpus vectors picked in-plan by hash bucket.
     // Two-level mode materializes them ONCE (nlist rows): the leader /
@@ -614,7 +582,7 @@ object Similarity {
       .join(broadcast(candidates
         .groupBy(pmod(xxhash64(col(idCol)), lit(nlist)).as("cell"))
         .agg(min(col(idCol)).as("_sid"))), col(idCol) === col("_sid"))
-      .select(col("cell"), dbl(col(vecCol)).as("cellv"))
+      .select(col("cell"), ivfDbl(col(vecCol)).as("cellv"))
     // ALWAYS materialized (the ivfBuild centroid precedent): coarse is
     // referenced by the assignment, the probe side, and — via save() —
     // its own write; lazy, each reference re-runs the corpus hash-pick
@@ -703,51 +671,29 @@ object Similarity {
     ivfPqServe(queries, index, rerank, Some(delta), k, nprobe, shortlist,
       m, idCol, vecCol)
 
-  /** Fold the append log back INTO a built [[IvfPqIndex]] —
-    * [[ivfAbsorbDelta]]'s contract on the production architecture:
-    * delta rows assign to the EXISTING coarse quantizer's cells (one
-    * bounded pass over the delta; exact fold, or the two-level fold
-    * past the auto threshold), their residuals encode against the
-    * EXISTING codebook, and the integer codes append to the codes
-    * table. Neither quantizer retrains, the indexed corpus is never
-    * re-read, and the absorbed index serves through [[ivfPqSearch]]
-    * with the delta arm retired. The re-rank corpus passed to search
-    * must then include the absorbed rows (they are indexed now — the
-    * raw-vector side lives wherever the corpus lives, per the
-    * IvfPqIndex contract).
-    *
-    * Same disjointness contract and absorb-vs-rebuild trade as
-    * [[ivfAbsorbDelta]]: absorbed rows get probe-path + ADC recall
-    * instead of the delta arm's exact scoring, and quantizer drift
-    * after many absorptions still means rebuild. `m` as in
-    * [[ivfPqSearch]]: positive = caller-known, otherwise derived from
-    * the persisted codebook; a mismatched m raises in-plan via the
-    * same width guard the serve path ships.
+  /** Per query the `shortlist` lowest-ADC candidates (qid, cid) of a
+    * (qid, cid, _d) subspace-distance stream: the exact DECIMAL
+    * per-candidate sum ranks at double resolution inside the bounded
+    * TopKAgg (ties by cid), so the exchange carries ≤ shortlist pairs
+    * per (query × partition).
     */
-  def ivfPqAbsorbDelta(index: IvfPqIndex, delta: DataFrame,
-                       m: Int = -1, twoLevelAssign: Boolean = false,
-                       twoLevelAutoNlist: Int = 512,
-                       idCol: String = "vec_id",
-                       vecCol: String = "embedding"): IvfPqIndex = {
-    requireIntegralId(delta, idCol)
-    val mEff =
-      if (m > 0) m
-      else index.builtM.getOrElse(
-        index.codebook.agg(max(col("sub"))).head().getInt(0) + 1)
-    def dbl(c: Column) = graft.functions.VecKernels.to_double(c) // compiled cast kernel (r21): same values as the interpreted
-    // transform(cast) per element, one call per row
-    val cand = delta.select(col(idCol).as("cid"), dbl(col(vecCol)).as("cv"))
-    val coarse = index.coarse
-    val nlist = coarse.count() // quantizer-sized, never the corpus
-    val twoLevel = twoLevelAssign || nlist >= twoLevelAutoNlist
-    if (!twoLevelAssign && twoLevel)
-      warnAutoTwoLevel("ivfPqAbsorbDelta", nlist, twoLevelAutoNlist)
-    val encoded = ivfPqEncode(
-      ivfPqAssignResiduals(cand, coarse, twoLevel),
-      index.codebook, mEff, Some("ivfPqAbsorbDelta"))
-    IvfPqIndex(coarse, index.codebook,
-      index.codes.unionByName(encoded), builtM = Some(mEff))
-  }
+  private def adcShortlist(scored: DataFrame, shortlist: Int): DataFrame =
+    scored.groupBy(col("qid"), col("cid")).agg(sum(col("_d")).as("adc_dist"))
+      .filter(col("qid") =!= col("cid"))
+      .groupBy(col("qid"))
+      .agg(TopKAgg.top_k(col("adc_dist").cast(DoubleType),
+        col("cid").cast(LongType), shortlist, ascending = true).as("_tk"))
+      .select(col("qid"), explode(col("_tk")).as("_e"))
+      .select(col("qid"), col("_e.id").as("cid"))
+
+  /** The subvector count of `index`: `m` when the caller knows it
+    * (positive), else the carried `builtM`, else derived from the
+    * codebook — one max over a codes×m-row table (loaded indexes).
+    */
+  private def pqM(index: IvfPqIndex, m: Int): Int =
+    if (m > 0) m
+    else index.builtM.getOrElse(
+      index.codebook.agg(max(col("sub"))).head().getInt(0) + 1)
 
   private def ivfPqServe(queries: DataFrame, index: IvfPqIndex,
                          rerank: DataFrame, delta: Option[DataFrame],
@@ -755,13 +701,8 @@ object Similarity {
                          idCol: String, vecCol: String): DataFrame = {
     require(shortlist >= k, "need shortlist >= k")
     requireIntegralId(queries, idCol)
-    val mEff =
-      if (m > 0) m
-      else index.builtM.getOrElse(
-        index.codebook.agg(max(col("sub"))).head().getInt(0) + 1)
+    val mEff = pqM(index, m)
     import graft.functions.VecKernels.{vec_sqdist_d, vec_sub_d}
-    def dbl(c: Column) = graft.functions.VecKernels.to_double(c) // compiled cast kernel (r21): same values as the interpreted
-    // transform(cast) per element, one call per row
     def l2(a: Column, b: Column) = vec_sqdist_d(a, b)
 
     val coarse = index.coarse
@@ -770,11 +711,11 @@ object Similarity {
     // the re-rank vector source: the indexed corpus, plus the appended
     // tail when serving a stale index — disjoint by contract, so the
     // union never double-scores a candidate
-    val cand0 = rerank.select(col(idCol).as("cid"), dbl(col(vecCol)).as("cv"))
+    val cand0 = rerank.select(col(idCol).as("cid"), ivfDbl(col(vecCol)).as("cv"))
     val cand = delta.fold(cand0)(d => cand0.unionByName(
-      d.select(col(idCol).as("cid"), dbl(col(vecCol)).as("cv"))))
+      d.select(col(idCol).as("cid"), ivfDbl(col(vecCol)).as("cv"))))
     val q = queries.select(col(idCol).cast(LongType).as("qid"),
-      dbl(col(vecCol)).as("qv"))
+      ivfDbl(col(vecCol)).as("qv"))
 
     // probe: per query the nprobe nearest cells. Only nlist rows per
     // query, but the bounded TopKAgg keeps even this stage map-side
@@ -817,14 +758,8 @@ object Similarity {
     // per query bounded by shortlist/k, never the probed candidate count
     // (≈ nprobe/nlist of the corpus — still linear in N through one
     // task per query under the old window shape)
-    val short = encoded.join(broadcast(adc), Seq("cell", "sub", "_code"))
-      .groupBy(col("qid"), col("cid")).agg(sum(col("_d")).as("adc_dist"))
-      .filter(col("qid") =!= col("cid"))
-      .groupBy(col("qid"))
-      .agg(TopKAgg.top_k(col("adc_dist").cast(DoubleType),
-        col("cid").cast(LongType), shortlist, ascending = true).as("_tk"))
-      .select(col("qid"), explode(col("_tk")).as("_e"))
-      .select(col("qid"), col("_e.id").as("cid"))
+    val short = adcShortlist(
+      encoded.join(broadcast(adc), Seq("cell", "sub", "_code")), shortlist)
 
     // delta arm: EVERY appended candidate enters every query's re-rank
     // set (the tail is small by contract — it rides the broadcast of
@@ -846,16 +781,9 @@ object Similarity {
     // the re-rank set is ≤ shortlist·nq (+ nq·|delta|) rows — BROADCAST
     // it into the corpus-sized raw-vector scan (the bqSearch lesson:
     // unhinted, the planner shuffles the corpus at scale)
-    cand.join(broadcast(rerankSet), "cid").join(broadcast(q), "qid")
+    presentTopK(cand.join(broadcast(rerankSet), "cid").join(broadcast(q), "qid")
       .select(col("qid"), col("cid").cast(LongType).as("cid"),
-        l2(col("qv"), col("cv")).as("dist"))
-      .groupBy(col("qid"))
-      .agg(TopKAgg.top_k(col("dist"), col("cid"), k, ascending = true)
-        .as("_tk"))
-      .select(col("qid"), posexplode(col("_tk")))
-      .select(col("qid"), col("col.id").as("cid"), col("col.score").as("dist"),
-        (col("pos") + 1).cast(LongType).as("rank"))
-      .orderBy("qid", "rank")
+        l2(col("qv"), col("cv")).as("dist")), k, "dist", ascending = true)
   }
 
   /** Random-hyperplane LSH signature: `bits` sign-bits, bit j = sign of
@@ -916,9 +844,9 @@ object Similarity {
     * same (bits, tables) — persist those two ints next to the table
     * (a mismatched serve simply stops colliding, the undetectable-
     * from-rows caveat the MinHash registry documents). Same staleness
-    * contract as every persisted index here; append-absorb is EXACT
-    * like [[bqAbsorbDelta]] (the encoder is stateless — new rows band
-    * through the same definition and append).
+    * contract as every persisted index here; append-absorb is EXACT,
+    * as for binary codes ([[absorb]]): the encoder is stateless — new
+    * rows band through the same definition and append.
     */
   def lshBuild(df: DataFrame, bits: Int = 4, tables: Int = 16,
                idCol: String = "vec_id",
@@ -1005,17 +933,13 @@ object Similarity {
               idCol: String = "vec_id", vecCol: String = "embedding",
               pinProbeParallelism: Boolean = false): DataFrame = {
     requireIntegralIds(queries, candidates, idCol)
-    // the two-level path engages ITSELF at nlist ≥ twoLevelAutoNlist
-    // (the semanticDedup twoLevelAutoK pattern): nlist scales with the
-    // corpus in the IVF regime, so nlist — known statically — IS the
-    // quadratic-wall signal (the measured 497 s exact-assign wall at
-    // nlist=1600, SCALE.md), and a 100 TB run must not depend on the
-    // caller knowing a flag exists. Default 512: safely above every
-    // gate's nlist=16, safely below the measured wall. Pass
-    // Int.MaxValue to force the exact assignment at any nlist.
-    val twoLevel = twoLevelAssign || nlist >= twoLevelAutoNlist
-    if (!twoLevelAssign && twoLevel)
-      warnAutoTwoLevel("ivfTopK", nlist, twoLevelAutoNlist)
+    // the two-level path engages ITSELF at nlist ≥ twoLevelAutoNlist:
+    // nlist — known statically — IS the quadratic-wall signal, and a
+    // 100 TB run must not depend on the caller knowing a flag exists.
+    // Default 512: safely above every gate's nlist=16, safely below the
+    // measured wall.
+    val twoLevel = twoLevelEngaged("ivfTopK", twoLevelAssign, nlist,
+      twoLevelAutoNlist)
     val g = math.max(1, math.round(math.sqrt(nlist.toDouble)).toInt)
     // AVERAGE-capacity sanity bound, not a guarantee: leader groups
     // are hash-picked and nearest-leader regrouping makes them uneven,
@@ -1141,6 +1065,56 @@ object Similarity {
       .select(col(id), col(v), col(nn), explode(col("_tk")).as("_e"))
       .select(col(id), col(v), col(nn), col("_e.id").as("centroid_id"))
 
+  /** Raw rows assigned to ONE cell each exactly as [[ivfBuild]] assigns
+    * them, as cell-table rows (cid, cv, cn, centroid_id): the exact
+    * nearest-centroid pick, or the two-level leader-group fold with g
+    * from the ACTUAL surviving centroid count — as ivfSearch re-derives
+    * it, so build and search group leaders identically, including after
+    * a save/load round-trip. Shared by the build and every lifecycle
+    * verb, so built, absorbed and priced rows land alike. `centroids`
+    * must be materialized.
+    */
+  private def ivfCells(centroids: DataFrame, df: DataFrame,
+                       twoLevel: Boolean, groups: Int, idCol: String,
+                       vecCol: String): DataFrame =
+    if (twoLevel) {
+      val leaders = ivfLeaders(centroids, gOf(centroids))
+      ivfAssign2(df, leaders, ivfGrouped(centroids, leaders), 1, groups,
+        idCol, vecCol, "cid", "cv", "cn")
+    } else ivfAssign(df, centroids, 1, idCol, vecCol, "cid", "cv", "cn")
+
+  /** (centroid_id, _d): each cell row's cosine distance to its centroid. */
+  private def ivfCellDistance(cells: DataFrame,
+                              centroids: DataFrame): DataFrame =
+    cells.join(broadcast(centroids), "centroid_id")
+      .select(col("centroid_id"),
+        (lit(1.0) - ivfDot(col("cv"), col("cvec")) /
+          (col("cn") * col("cnorm"))).as("_d"))
+
+  /** The centroids as ONE `_cs` array of (centroid_id, cvec, _cn)
+    * structs, centroid_id-ascending — the broadcast side of
+    * [[nearestCentroid]].
+    */
+  private def centroidArray(centroids: DataFrame, norm: Column): DataFrame =
+    centroids.agg(array_sort(collect_list(struct(col("centroid_id"),
+      col("cvec"), norm.as("_cn")))).as("_cs"))
+
+  /** Map-side nearest centroid by cosine distance, struct(_d, _c), for
+    * the vector `v` of norm `n` against [[centroidArray]]'s `_cs`: a
+    * strict-< fold over the id-ascending array, so the lowest id wins
+    * ties — ivfAssign's TopKAgg semantics with no exchange.
+    */
+  private def nearestCentroid(v: Column, n: Column): Column =
+    aggregate(col("_cs"),
+      struct(lit(null).cast(DoubleType).as("_d"), lit(-1L).as("_c")),
+      (acc, s) => {
+        val d = lit(1.0) - ivfDot(v, s.getField("cvec")) /
+          (n * s.getField("_cn"))
+        when(acc.getField("_d").isNull || d < acc.getField("_d"),
+          struct(d.as("_d"), s.getField("centroid_id").cast(LongType).as("_c")))
+          .otherwise(acc)
+      })
+
   /** Two-level L2 cell pick for [[ivfPqTopK]]'s candidate-side coarse
     * assignment — the sim13 leader trick carried into the L2/double
     * regime IVF-PQ runs in (its quantizer, residuals, ADC and re-rank
@@ -1166,7 +1140,7 @@ object Similarity {
   /** Exact L2 cell pick for the IVF-PQ family: per-row argmin fold
     * over the ONE broadcast cell array — zero expansion, zero
     * exchange, zero sort (the km01/dd15 fold shape). Shared by
-    * [[ivfPqBuild]]'s assignment and [[ivfPqAbsorbDelta]]'s
+    * [[ivfPqBuild]]'s assignment and [[absorb]]'s
     * re-assignment of the append log. `coarse` must be materialized
     * by the caller.
     */
@@ -1181,7 +1155,7 @@ object Similarity {
 
   /** Coarse-assign `cand` (cid, cv) to `coarse`'s cells and attach the
     * residual rv = cv − cellv — the ONE assignment definition shared by
-    * [[ivfPqBuild]] and [[ivfPqAbsorbDelta]]: built and absorbed rows
+    * [[ivfPqBuild]] and [[absorb]]: built and absorbed rows
     * must land in identical cells with identical residual math, or
     * served probes against an absorbed index go silently wrong.
     */
@@ -1331,11 +1305,8 @@ object Similarity {
                twoLevelAutoNlist: Int = 512,
                idCol: String = "vec_id", vecCol: String = "embedding"): IvfIndex = {
     requireIntegralId(candidates, idCol)
-    // self-engaging big-corpus switch (nlist ∝ N ⇒ the exact candidate
-    // assignment is quadratic); Int.MaxValue disarms — see ivfTopK
-    val twoLevel = twoLevelAssign || nlist >= twoLevelAutoNlist
-    if (!twoLevelAssign && twoLevel)
-      warnAutoTwoLevel("ivfBuild", nlist, twoLevelAutoNlist)
+    val twoLevel = twoLevelEngaged("ivfBuild", twoLevelAssign, nlist,
+      twoLevelAutoNlist)
     // seed centroids picked ENTIRELY in-plan: min id per
     // pmod(xxhash64(id), nlist) hash bucket — ≤ nlist well-spread ids
     // with no driver-side action (an earlier candidates.count() here cost
@@ -1358,29 +1329,13 @@ object Similarity {
       .select(col(idCol).as("_sid"), ivfDbl(col(vecCol)).as("_sv"))
       .withColumn("_sn", sqrt(ivfDot(col("_sv"), col("_sv"))))
     val refined = (1 to iters).foldLeft(seeds) { (cents, _) =>
-      val cn = cents.withColumn("_cn", sqrt(ivfDot(col("cvec"), col("cvec"))))
-      // per-row codegen'd argmin fold over ONE broadcast centroid
-      // array (the r16 SortAggregate lesson applied to the refinement
-      // loop, closing the last flagged expansion site): no sample×nlist
-      // row blow-up, no struct-min SortAggregate, no groupBy exchange —
-      // each sample row picks its centroid in place. Array sorted by
-      // centroid_id asc + strict-< fold ⇒ lowest id wins ties, the
-      // old min(struct(_d, centroid_id)) semantics exactly.
-      val centArr = cn.agg(array_sort(collect_list(
-        struct(col("centroid_id"), col("cvec"), col("_cn")))).as("_cs"))
-      sample.crossJoin(broadcast(centArr))
-        .select(col("_sid"), col("_sv"),
-          aggregate(col("_cs"),
-            struct(lit(null).cast(DoubleType).as("_d"),
-              lit(-1L).as("_c")),
-            (acc, s) => {
-              val d = lit(1.0) - ivfDot(col("_sv"), s.getField("cvec")) /
-                (col("_sn") * s.getField("_cn"))
-              when(acc.getField("_d").isNull || d < acc.getField("_d"),
-                struct(d.as("_d"),
-                  s.getField("centroid_id").cast(LongType).as("_c")))
-                .otherwise(acc)
-            }).getField("_c").as("centroid_id"))
+      // per-row argmin fold over ONE broadcast centroid array (the r16
+      // SortAggregate lesson): no sample×nlist row blow-up, no
+      // struct-min SortAggregate, no groupBy exchange
+      sample.crossJoin(broadcast(centroidArray(cents,
+          sqrt(ivfDot(col("cvec"), col("cvec"))))))
+        .select(nearestCentroid(col("_sv"), col("_sn")).getField("_c")
+          .as("centroid_id"), col("_sv"))
         .select(col("centroid_id"), posexplode(col("_sv")))
         .groupBy(col("centroid_id"), col("pos"))
         .agg(avg(col("col").cast(DecimalType(25, 12))).cast(DoubleType).as("_m"))
@@ -1402,19 +1357,8 @@ object Similarity {
     val centroids = refined
       .withColumn("cnorm", sqrt(ivfDot(col("cvec"), col("cvec"))))
       .localCheckpoint()
-    if (twoLevel) {
-      // g derives from the ACTUAL surviving centroid count (hash-bucket
-      // collisions and k-means death can leave < nlist), exactly as
-      // ivfSearch re-derives it — build and search MUST group leaders
-      // identically, including after a save/load round-trip
-      val leaders = ivfLeaders(centroids, gOf(centroids))
-      val grouped = ivfGrouped(centroids, leaders)
-      IvfIndex(centroids,
-        ivfAssign2(candidates, leaders, grouped, 1, candidateGroups,
-          idCol, vecCol, "cid", "cv", "cn"))
-    } else IvfIndex(centroids,
-      ivfAssign(candidates, centroids, 1, idCol, vecCol,
-        "cid", "cv", "cn"))
+    IvfIndex(centroids, ivfCells(centroids, candidates, twoLevel,
+      candidateGroups, idCol, vecCol))
   }
 
   /** Serve top-`k` against a built [[IvfIndex]] — queries assign to
@@ -1502,99 +1446,7 @@ object Similarity {
     presentTopK(indexed.unionByName(fresh), k)
   }
 
-  /** Fold the append log back INTO a built [[IvfIndex]] — the delta
-    * REABSORPTION step that closes the serving lifecycle
-    * [[ivfSearchWithDelta]] opens ("a growing delta IS the rebuild
-    * signal" — but a full rebuild re-clusters and re-reads the whole
-    * corpus; absorption doesn't): delta rows are assigned to the
-    * EXISTING quantizer's cells in one bounded pass over the DELTA
-    * (the same per-row argmin fold the build uses — the indexed corpus
-    * is never re-read and the quantizer is never re-trained) and
-    * appended to the cell table. Saving the absorbed index rewrites
-    * the cells compacted; serving it sees the absorbed rows through
-    * the normal probe path, so the per-query exact delta arm retires
-    * until the next append.
-    *
-    * CONTRACT: same disjointness as [[ivfSearchWithDelta]] — `delta`
-    * is the append log, so its ids must not already be in the index (a
-    * row in both would hold two cell slots and score twice). Absorption
-    * is NOT a rebuild: cell centroids keep their built positions, so
-    * after many absorptions the quantizer drifts from the grown data
-    * distribution — absorbed rows are exactly as findable as built
-    * rows (probe-path recall, vs the delta arm's exact 1.0), and a
-    * delta that stops being small relative to the built corpus still
-    * means REBUILD. Absorb on the serving cadence, rebuild on the
-    * drift cadence.
-    *
-    * EQUIVALENCE (the gate's oracle): with every cell probed
-    * (nprobe ≥ surviving cells), [[ivfSearch]] over the absorbed index
-    * scores exactly the rows ivfSearchWithDelta scores, on the same
-    * double cosine — row-for-row identical output. At bounded nprobe
-    * the two differ only in the delta slice's recall (probe-path vs
-    * exact), which is the absorb-vs-delta-arm trade by construction.
-    */
-  def ivfAbsorbDelta(index: IvfIndex, delta: DataFrame,
-                     twoLevelAssign: Boolean = false,
-                     candidateGroups: Int = 2,
-                     twoLevelAutoNlist: Int = 512,
-                     idCol: String = "vec_id",
-                     vecCol: String = "embedding"): IvfIndex = {
-    requireIntegralId(delta, idCol)
-    val centroids = index.centroids
-    // nlist-sized count (the gOf discipline), never the corpus: the
-    // auto two-level switch keys on the PERSISTED quantizer's size
-    val nlist = centroids.count()
-    val twoLevel = twoLevelAssign || nlist >= twoLevelAutoNlist
-    if (!twoLevelAssign && twoLevel)
-      warnAutoTwoLevel("ivfAbsorbDelta", nlist, twoLevelAutoNlist)
-    val assigned =
-      if (twoLevel) {
-        val g = math.max(1, math.round(math.sqrt(nlist.toDouble)).toInt)
-        val leaders = ivfLeaders(centroids, g)
-        val grouped = ivfGrouped(centroids, leaders)
-        ivfAssign2(delta, leaders, grouped, 1, candidateGroups,
-          idCol, vecCol, "cid", "cv", "cn")
-      } else ivfAssign(delta, centroids, 1, idCol, vecCol,
-        "cid", "cv", "cn")
-    IvfIndex(centroids, index.cells.unionByName(assigned))
-  }
-
-  /** Per-cell assignment-quality statistics of a built [[IvfIndex]] —
-    * the THIRD index artifact (alongside centroids and cells) that
-    * turns sim20/sim22's prose contract ("a growing delta IS the
-    * rebuild signal") into a MEASURED one: (centroid_id, n, mean_dist)
-    * where mean_dist is the mean cosine distance of the cell's built
-    * members to their centroid, computed in ONE bounded pass over the
-    * cell table — run it at build/save time (when the corpus pass is
-    * amortized) and persist with [[ivfSaveStats]]; [[ivfDriftCheck]]
-    * then prices any later delta against it without ever re-reading
-    * the indexed corpus. The mean rides an exact decimal sum (the
-    * SparkEntry discipline), so the artifact is bit-deterministic
-    * across partitionings.
-    */
-  def ivfCellStats(index: IvfIndex): DataFrame =
-    index.cells
-      .join(broadcast(index.centroids), "centroid_id")
-      .select(col("centroid_id"),
-        (lit(1.0) - ivfDot(col("cv"), col("cvec")) /
-          (col("cn") * col("cnorm"))).as("_d"))
-      .groupBy(col("centroid_id"))
-      .agg(count(lit(1)).as("n"),
-        (sum(col("_d").cast(DecimalType(30, 12))) / count(lit(1)))
-          .cast(DoubleType).as("mean_dist"))
-
-  /** Persist [[ivfCellStats]] next to the index artifacts (one pass
-    * over the cells, amortized into the build/save cadence).
-    */
-  def ivfSaveStats(index: IvfIndex, path: String): Unit =
-    ivfCellStats(index).write.mode("overwrite").parquet(s"$path/cellstats")
-
-  /** Load the stats artifact persisted by [[ivfSaveStats]]. */
-  def ivfLoadStats(spark: org.apache.spark.sql.SparkSession,
-                   path: String): DataFrame =
-    spark.read.parquet(s"$path/cellstats")
-
-  /** The drift report [[ivfDriftCheck]] computes. Two complementary
+  /** The drift report [[driftCheck]] computes. Two complementary
     * signals, either of which trips `drifted`:
     *  - FIT: deltaMeanDist > ratioThreshold × expectedMeanDist — the
     *    delta's vectors sit farther from their assigned centroids than
@@ -1617,210 +1469,358 @@ object Similarity {
                                   cellShift: Double,
                                   drifted: Boolean)
 
-  /** Measure quantizer DRIFT of an append log against a built index —
-    * the signal that decides absorb-vs-rebuild, which absorption
-    * (sim25/sim26) deliberately cannot: after many absorptions the
-    * quantizer silently degrades (absorbed rows ride cells trained on
-    * an old distribution) with zero errors and slowly sinking recall.
-    * ONE bounded pass over the DELTA: each delta row assigns to its
-    * nearest cell exactly as the build would (the same per-row argmin
-    * fold) and folds into a per-cell (count, distance-sum) frame —
-    * quantizer-sized — from which both report signals derive: the fit
-    * ratio prices delta rows against the BUILD's per-cell means
-    * ([[ivfCellStats]], weighted by where the delta actually lands, so
-    * a delta legitimately concentrated in wide cells is priced against
-    * those cells), and the occupancy shift compares cell-share
-    * distributions. Delta rows landing in cells with no built members
-    * carry no fit expectation and are excluded from the means
-    * (`pricedRows` reports how many were priced) but DO count toward
-    * the shift — landing where the build put nothing is shift by
-    * definition. The indexed corpus is never re-read.
-    *
-    * Defaults chosen from the measured margins (DriftProbe,
-    * BENCH_NOTES r19): an un-drifted corpus slice reads ratio ≈ 1.00
-    * ± 0.01 and shift ≈ sampling noise (~0.15 at 71 rows × 16 cells),
-    * while a planted off-distribution delta concentrates its mass
-    * (shift ≳ 0.8) long before the cosine fit ratio moves past ~1.16
-    * on an isotropic corpus — so fit trips at 1.5 (half again worse
-    * than build, the anisotropic-regime signal) and shift at 0.5
-    * (>2.5× sampling noise, far under the planted reading). WARN-logs
-    * like every self-engaging switch; the caller reacts by REBUILDING
-    * instead of absorbing. This is an ACTION (one job over the delta),
-    * sized to the absorb cadence it gates.
+  // ---- index lifecycle: one path over a per-kind codec ------------------
+
+  /** What the lifecycle verbs need to know about one index kind, and
+    * nothing more: which id-keyed row table a delete rewrites and how
+    * raw delta rows are assigned and encoded against the FROZEN
+    * quantizer. Resolved implicitly from the index argument, one
+    * instance per kind:
+    *  - [[IvfIndex]]: cosine cells, the raw vectors ride the cell table;
+    *  - [[IvfPqIndex]]: L2 residual PQ codes, raw vectors live outside;
+    *  - a bare `DataFrame` of [[binaryCodes]]: stateless sign bits, id
+    *    in the first column — no quantizer, so no drift either.
+    * `tag` prefixes every message site (`ivfPqAbsorbDelta`,
+    * `bqDeleteIds`, `ivfDriftCheck`, …): the names logs and alerts
+    * already key on. The type and its instances are public so callers
+    * in any package resolve them; every member is private.
     */
-  def ivfDriftCheck(stats: DataFrame, centroids: DataFrame,
-                    delta: DataFrame, ratioThreshold: Double = 1.5,
-                    shiftThreshold: Double = 0.5,
-                    twoLevelAssign: Boolean = false,
-                    candidateGroups: Int = 2,
-                    twoLevelAutoNlist: Int = 512,
-                    idCol: String = "vec_id",
-                    vecCol: String = "embedding"): IvfDriftReport = {
-    requireIntegralId(delta, idCol)
-    // the delta must be assigned the way the BUILD assigned its cells,
-    // or the report compares incompatible rules: a two-level-built
-    // index (nlist past the auto threshold) placed its rows through
-    // the leader-group fold, so an exact-assigned delta would land
-    // differently on an IN-distribution delta, inflating cellShift and
-    // biasing the fit low. Same auto-engage contract as every other
-    // entry point; the threshold doubles as the cost switch — the
-    // exact map-side fold is O(nlist) per row, the two-level arm
-    // O(√nlist).
-    val nlist = centroids.count() // quantizer-sized, never the corpus
-    val twoLevel = twoLevelAssign || nlist >= twoLevelAutoNlist
-    if (!twoLevelAssign && twoLevel)
-      warnAutoTwoLevel("ivfDriftCheck", nlist, twoLevelAutoNlist)
-    val scored =
-      if (twoLevel) {
-        // the build's own leader-group fold (ivfAssign2 — identical
-        // cell placement), distance recovered via one broadcast join
-        // on the picked cell; the groupBy exchange inside ivfAssign2
-        // carries the delta once, the price of assignment parity in
-        // the big-nlist regime
-        val leaders = ivfLeaders(centroids, gOf(centroids))
-        val grouped = ivfGrouped(centroids, leaders)
-        ivfAssign2(delta, leaders, grouped, 1, candidateGroups,
-          idCol, vecCol, "cid", "cv", "cn")
-          .join(broadcast(centroids), "centroid_id")
-          .select(col("centroid_id"),
-            (lit(1.0) - ivfDot(col("cv"), col("cvec")) /
-              (col("cn") * col("cnorm"))).as("_d"))
-      } else {
-        // exact arm: a MAP-SIDE per-row argmin fold over one broadcast
-        // sorted centroid array (the ivfBuild-refinement pattern —
-        // array sorted by centroid_id asc + strict-< fold ⇒ lowest id
-        // wins ties, ivfAssign's TopKAgg semantics exactly), emitting
-        // (cell, distance) in place. ivfAssign's groupBy(id) would
-        // instead EXCHANGE every delta vector (measured 8.4 MB at a
-        // 20k-row delta, r19life — delta-sized at 100 TB); here the
-        // only exchange is the quantizer-sized per-cell partial agg.
-        val cn = centroids
-          .agg(array_sort(collect_list(struct(col("centroid_id"),
-            col("cvec"), col("cnorm")))).as("_cs"))
-        delta
-          .select(col(idCol),
-            graft.functions.VecKernels.to_double(col(vecCol)).as("_v"))
-          .withColumn("_n", sqrt(ivfDot(col("_v"), col("_v"))))
-          .crossJoin(broadcast(cn))
-          .select(aggregate(col("_cs"),
-            struct(lit(null).cast(DoubleType).as("_d"), lit(-1L).as("_c")),
-            (acc, s) => {
-              val d = lit(1.0) - ivfDot(col("_v"), s.getField("cvec")) /
-                (col("_n") * s.getField("cnorm"))
-              when(acc.getField("_d").isNull || d < acc.getField("_d"),
-                struct(d.as("_d"),
-                  s.getField("centroid_id").cast(LongType).as("_c")))
-                .otherwise(acc)
-            }).as("_best"))
-          .select(col("_best._c").as("centroid_id"), col("_best._d").as("_d"))
+  sealed trait IndexCodec[I] {
+    private[graft] def tag: String
+    private[graft] def delete(index: I, tombstones: DataFrame, site: String): I
+    private[graft] def absorb(index: I, delta: DataFrame, tl: TwoLevel,
+                              idCol: String, vecCol: String): I
+  }
+
+  /** The trained kinds: a quantizer whose cells can drift, persisted as
+    * an index directory (`StreamingJobs.absorbLog` swaps it). `cellDistances`
+    * assigns raw rows exactly as the build assigns them and emits
+    * (cellKey, _d) with the per-row distance the stats and drift signals
+    * fold: cosine distance to the centroid (IVF), squared-L2 residual
+    * (IVF-PQ, the metric its ADC path ranks by).
+    */
+  sealed trait TrainedCodec[I] extends IndexCodec[I] {
+    private[graft] def cellKey: String
+    private[graft] def nlist(index: I): Long
+    private[graft] def cellDistances(index: I, rows: DataFrame, tl: TwoLevel,
+                                     idCol: String, vecCol: String): DataFrame
+    /** (cellKey, _d) of the INDEXED rows; `corpus` is their raw vectors
+      * where the index does not carry them.
+      */
+    private[graft] def builtDistances(index: I, corpus: Option[DataFrame],
+                                      tl: TwoLevel, idCol: String,
+                                      vecCol: String): DataFrame
+    /** The indexed rows as (idCol bigint, vecCol array<double>). */
+    private[graft] def indexedVectors(index: I, corpus: Option[DataFrame],
+                                      idCol: String, vecCol: String): DataFrame
+    /** A fresh build over `grown` with the index's own geometry. */
+    private[graft] def rebuild(index: I, grown: DataFrame, tl: TwoLevel,
+                               idCol: String, vecCol: String): I
+    private[graft] def load(spark: org.apache.spark.sql.SparkSession,
+                            path: String): I
+    private[graft] def save(index: I, path: String): Unit
+  }
+
+  /** The two-level switch as every lifecycle verb forwards it, with the
+    * message site its auto-engage warning names.
+    */
+  private[graft] final case class TwoLevel(site: String, explicit: Boolean,
+                                           groups: Int, autoNlist: Int) {
+    def engaged(nlist: Long): Boolean =
+      twoLevelEngaged(site, explicit, nlist, autoNlist)
+  }
+
+  private def needCorpus(corpus: Option[DataFrame], site: String): DataFrame =
+    corpus.getOrElse(throw new IllegalArgumentException(s"$site: an " +
+      "IVF-PQ index holds lossy codes — pass the raw corpus of its " +
+      "indexed rows"))
+
+  object IndexCodec {
+    implicit val ivf: TrainedCodec[IvfIndex] = Ivf
+    implicit val ivfPq: TrainedCodec[IvfPqIndex] = IvfPq
+    implicit val bq: IndexCodec[DataFrame] = Bq
+
+    private object Ivf extends TrainedCodec[IvfIndex] {
+      val tag = "ivf"
+      val cellKey = "centroid_id"
+      def delete(index: IvfIndex, tombstones: DataFrame,
+                 site: String): IvfIndex =
+        index.copy(cells = dropTombstoned(index.cells, "cid", tombstones, site))
+      def nlist(index: IvfIndex): Long = index.centroids.count()
+      def absorb(index: IvfIndex, delta: DataFrame, tl: TwoLevel,
+                 idCol: String, vecCol: String): IvfIndex =
+        index.copy(cells = index.cells.unionByName(ivfCells(index.centroids,
+          delta, tl.engaged(nlist(index)), tl.groups, idCol, vecCol)))
+      def cellDistances(index: IvfIndex, rows: DataFrame, tl: TwoLevel,
+                        idCol: String, vecCol: String): DataFrame = {
+        val centroids = index.centroids
+        if (tl.engaged(nlist(index)))
+          // the build's own leader-group fold — identical cell placement
+          ivfCellDistance(ivfCells(centroids, rows, twoLevel = true,
+            tl.groups, idCol, vecCol), centroids)
+        else
+          // a MAP-SIDE fold over one broadcast centroid array: the only
+          // exchange is the caller's quantizer-sized per-cell agg
+          // (ivfAssign's groupBy would exchange every delta vector)
+          rows.select(ivfDbl(col(vecCol)).as("_v"))
+            .withColumn("_n", sqrt(ivfDot(col("_v"), col("_v"))))
+            .crossJoin(broadcast(centroidArray(centroids, col("cnorm"))))
+            .select(nearestCentroid(col("_v"), col("_n")).as("_best"))
+            .select(col("_best._c").as(cellKey), col("_best._d").as("_d"))
       }
-    // single consumer (driftReport's mix join, itself checkpointed) —
-    // the delta pass materializes exactly once there, so a second
-    // checkpoint here bought nothing but one extra job (r21)
-    val perCell = scored
-      .groupBy(col("centroid_id"))
-      .agg(count(lit(1)).as("_dn"),
-        sum(col("_d").cast(DecimalType(30, 12))).as("_ds"))
-    driftReport(perCell, stats, "centroid_id", "ivfDriftCheck",
-      "ivfBuild over the grown corpus", ratioThreshold, shiftThreshold)
+      // the STORED assignment: one bounded pass over the cell table
+      def builtDistances(index: IvfIndex, corpus: Option[DataFrame],
+                         tl: TwoLevel, idCol: String,
+                         vecCol: String): DataFrame =
+        ivfCellDistance(index.cells, index.centroids)
+      def indexedVectors(index: IvfIndex, corpus: Option[DataFrame],
+                         idCol: String, vecCol: String): DataFrame =
+        index.cells.select(col("cid").cast(LongType).as(idCol),
+          col("cv").as(vecCol))
+      def rebuild(index: IvfIndex, grown: DataFrame, tl: TwoLevel,
+                  idCol: String, vecCol: String): IvfIndex =
+        ivfBuild(grown, nlist(index).toInt, twoLevelAssign = tl.explicit,
+          candidateGroups = tl.groups, twoLevelAutoNlist = tl.autoNlist,
+          idCol = idCol, vecCol = vecCol)
+      def load(spark: org.apache.spark.sql.SparkSession,
+               path: String): IvfIndex = ivfLoad(spark, path)
+      def save(index: IvfIndex, path: String): Unit = index.save(path)
+    }
+
+    private object IvfPq extends TrainedCodec[IvfPqIndex] {
+      val tag = "ivfPq"
+      val cellKey = "cell"
+      def delete(index: IvfPqIndex, tombstones: DataFrame,
+                 site: String): IvfPqIndex =
+        index.copy(codes = dropTombstoned(index.codes, "cid", tombstones, site))
+      def nlist(index: IvfPqIndex): Long = index.coarse.count()
+      def absorb(index: IvfPqIndex, delta: DataFrame, tl: TwoLevel,
+                 idCol: String, vecCol: String): IvfPqIndex = {
+        val m = pqM(index, -1)
+        val cand = delta.select(col(idCol).as("cid"), ivfDbl(col(vecCol)).as("cv"))
+        val encoded = ivfPqEncode(
+          ivfPqAssignResiduals(cand, index.coarse, tl.engaged(nlist(index))),
+          index.codebook, m, Some(tl.site))
+        index.copy(codes = index.codes.unionByName(encoded), builtM = Some(m))
+      }
+      def cellDistances(index: IvfPqIndex, rows: DataFrame, tl: TwoLevel,
+                        idCol: String, vecCol: String): DataFrame =
+        ivfPqAssignResiduals(
+          rows.select(col(idCol).as("cid"), ivfDbl(col(vecCol)).as("cv")),
+          index.coarse, tl.engaged(nlist(index)))
+          .select(col(cellKey), ivfDot(col("rv"), col("rv")).as("_d"))
+      def builtDistances(index: IvfPqIndex, corpus: Option[DataFrame],
+                         tl: TwoLevel, idCol: String,
+                         vecCol: String): DataFrame = {
+        val c = needCorpus(corpus, tl.site)
+        requireIntegralId(c, idCol)
+        cellDistances(index, c, tl, idCol, vecCol)
+      }
+      def indexedVectors(index: IvfPqIndex, corpus: Option[DataFrame],
+                         idCol: String, vecCol: String): DataFrame =
+        needCorpus(corpus, s"${tag}Maintain").select(
+          col(idCol).cast(LongType).as(idCol), ivfDbl(col(vecCol)).as(vecCol))
+      // the code count reads off the codebook: the build's own value
+      // unless refinement killed the highest code
+      def rebuild(index: IvfPqIndex, grown: DataFrame, tl: TwoLevel,
+                  idCol: String, vecCol: String): IvfPqIndex =
+        ivfPqBuild(grown, nlist(index).toInt, pqM(index, -1),
+          index.codebook.agg(max(col("_code"))).head().getLong(0).toInt + 1,
+          twoLevelAssign = tl.explicit, twoLevelAutoNlist = tl.autoNlist,
+          idCol = idCol, vecCol = vecCol)
+      def load(spark: org.apache.spark.sql.SparkSession,
+               path: String): IvfPqIndex = ivfPqLoad(spark, path)
+      def save(index: IvfPqIndex, path: String): Unit = index.save(path)
+    }
+
+    private object Bq extends IndexCodec[DataFrame] {
+      val tag = "bq"
+      def delete(codes: DataFrame, tombstones: DataFrame,
+                 site: String): DataFrame =
+        dropTombstoned(codes, codes.columns.head, tombstones, site)
+      // EXACT absorb: the encoder has no trained state, so absorbed rows
+      // are bit-identical to built-at-rest rows
+      def absorb(codes: DataFrame, delta: DataFrame, tl: TwoLevel,
+                 idCol: String, vecCol: String): DataFrame =
+        codes.unionByName(binaryCodes(delta, idCol, vecCol))
+    }
   }
 
-  /** [[ivfCellStats]] on the production architecture — the per-cell
-    * stats of an [[IvfPqIndex]]'s COARSE quantizer. Unlike the plain
-    * IVF case the index alone cannot yield them (the codes table is
-    * quantized — residual magnitudes are not recoverable from it), so
-    * the stats compute from the raw `corpus` in ONE bounded pass at
-    * build/save time, when the corpus pass is amortized: assign every
-    * row to its cell with the build's own fold (two-level past the
-    * auto threshold) and fold the per-cell mean SQUARED-L2 residual —
-    * the same metric the ADC/serve path ranks by. Persist with
-    * [[ivfPqSaveStats]]; [[ivfLoadStats]] reads it back (the artifact
-    * layout is family-agnostic).
+  /** Fold an append log INTO a built index without retraining: delta
+    * rows assign to the EXISTING quantizer exactly as the build assigns
+    * (exact fold, or the two-level fold past `twoLevelAutoNlist`), encode
+    * against the existing codebook where there is one, and append to
+    * the row table — one bounded pass over the DELTA, the indexed corpus
+    * never re-read. The absorbed index serves through the normal probe
+    * path, so the stale+delta arm ([[ivfSearchWithDelta]],
+    * [[ivfPqSearchWithDelta]]) retires until the next append.
+    *
+    * CONTRACT: `delta` is the append log — its ids must not already be
+    * indexed (a row in both would hold two result slots). Absorption is
+    * not a rebuild: absorbed rows ride cells trained on the old
+    * distribution, so absorb on the serving cadence and rebuild on the
+    * drift cadence ([[maintain]]). For binary codes absorption is exact.
+    * An IVF-PQ delta whose dimensionality does not match the codebook
+    * raises in-plan rather than mis-encode.
+    *
+    * EQUIVALENCE (PipelineSpec pins it): with every cell probed, serving
+    * the absorbed index ≡ serving the stale index plus the delta arm,
+    * row for row.
     */
-  def ivfPqCellStats(index: IvfPqIndex, corpus: DataFrame,
-                     twoLevelAssign: Boolean = false,
-                     twoLevelAutoNlist: Int = 512,
-                     idCol: String = "vec_id",
-                     vecCol: String = "embedding"): DataFrame = {
-    requireIntegralId(corpus, idCol)
-    val nlist = index.coarse.count() // quantizer-sized, never the corpus
-    val twoLevel = twoLevelAssign || nlist >= twoLevelAutoNlist
-    if (!twoLevelAssign && twoLevel)
-      warnAutoTwoLevel("ivfPqCellStats", nlist, twoLevelAutoNlist)
-    pqPerCellResiduals(corpus, index.coarse, twoLevel, idCol, vecCol)
-      .select(col("cell"), col("_cnt").as("n"),
-        (col("_sum") / col("_cnt")).cast(DoubleType).as("mean_dist"))
+  def absorb[I](index: I, delta: DataFrame, twoLevelAssign: Boolean = false,
+                candidateGroups: Int = 2, twoLevelAutoNlist: Int = 512,
+                idCol: String = "vec_id", vecCol: String = "embedding")
+               (implicit codec: IndexCodec[I]): I = {
+    requireIntegralId(delta, idCol)
+    codec.absorb(index, delta, TwoLevel(s"${codec.tag}AbsorbDelta",
+      twoLevelAssign, candidateGroups, twoLevelAutoNlist), idCol, vecCol)
   }
 
-  /** The ONE residual-squared per-cell fold behind [[ivfPqCellStats]]
-    * (the build-time expectation) and [[ivfPqDriftCheck]] (the delta
-    * pricing): both sides MUST aggregate the identical metric through
-    * the identical assignment, or the fit ratio compares apples to
-    * oranges — the `ivfPqAssignResiduals` one-definition discipline
-    * extended to the statistic computed on top of it.
+  /** Delete rows from a built index by id — absorb's mirror image, the
+    * right-to-be-forgotten arm: the row table (cells, codes) drops the
+    * tombstoned ids in one BROADCAST anti-join (`tombstones`' first
+    * column is the id set, metadata-sized, so the corpus-sized side is
+    * never shuffled); quantizers are untouched. Because assignment is
+    * per-row, the result IS the survivors assigned to the same
+    * quantizer. The rewrite lands when the caller saves the returned
+    * index; for IVF-PQ and binary codes the caller's re-rank corpus must
+    * drop the rows on the same cadence (a deleted id can never be
+    * shortlisted again, its codes are gone).
     */
-  private def pqPerCellResiduals(df: DataFrame, coarse: DataFrame,
-                                 twoLevel: Boolean, idCol: String,
-                                 vecCol: String): DataFrame = {
-    def dbl(c: Column) = graft.functions.VecKernels.to_double(c) // compiled cast kernel (r21): same values as the interpreted
-    // transform(cast) per element, one call per row
-    ivfPqAssignResiduals(
-      df.select(col(idCol).as("cid"), dbl(col(vecCol)).as("cv")),
-      coarse, twoLevel)
-      .select(col("cell"),
-        // Σ v·v over one array ≡ vec_dot_d(rv, rv): same products, same
-        // IEEE order, same null poisoning — the compiled-kernel swap
-        graft.functions.VecKernels.vec_dot_d(col("rv"), col("rv")).as("_d"))
-      .groupBy(col("cell"))
-      .agg(count(lit(1)).as("_cnt"),
-        sum(col("_d").cast(DecimalType(30, 12))).as("_sum"))
-  }
+  def delete[I](index: I, tombstones: DataFrame)
+               (implicit codec: IndexCodec[I]): I =
+    codec.delete(index, tombstones, s"${codec.tag}DeleteIds")
 
-  /** Persist [[ivfPqCellStats]] next to the index artifacts — the
-    * fourth IVF-PQ artifact (coarse, codebook, codes, cellstats).
+  /** Per-cell build statistics (cellKey, n, mean_dist): the mean per-row
+    * distance of the indexed rows to their cell — cosine for IVF (from
+    * the stored cell table, one bounded pass), squared-L2 residual for
+    * IVF-PQ (from the raw `corpus`, re-assigned with the build's fold:
+    * codes are lossy). Run it at build/save time and persist it with
+    * [[saveStats]]; [[driftCheck]] prices later deltas against it
+    * without re-reading the indexed corpus. The mean rides an exact
+    * decimal sum, so the artifact is bit-deterministic across
+    * partitionings.
     */
-  def ivfPqSaveStats(index: IvfPqIndex, corpus: DataFrame, path: String,
-                     idCol: String = "vec_id",
-                     vecCol: String = "embedding"): Unit =
-    ivfPqCellStats(index, corpus, idCol = idCol, vecCol = vecCol)
+  def cellStats[I](index: I, corpus: Option[DataFrame] = None,
+                   twoLevelAssign: Boolean = false,
+                   twoLevelAutoNlist: Int = 512, idCol: String = "vec_id",
+                   vecCol: String = "embedding")
+                  (implicit codec: TrainedCodec[I]): DataFrame =
+    perCellFold(codec.builtDistances(index, corpus,
+      TwoLevel(s"${codec.tag}CellStats", twoLevelAssign, 2,
+        twoLevelAutoNlist), idCol, vecCol), codec.cellKey)
+      .select(col(codec.cellKey), col("_dn").as("n"),
+        (col("_ds") / col("_dn")).cast(DoubleType).as("mean_dist"))
+
+  /** Persist [[cellStats]] next to the index artifacts (`cellstats`). */
+  def saveStats[I](index: I, path: String, corpus: Option[DataFrame] = None,
+                   idCol: String = "vec_id", vecCol: String = "embedding")
+                  (implicit codec: TrainedCodec[I]): Unit =
+    cellStats(index, corpus, idCol = idCol, vecCol = vecCol)
       .write.mode("overwrite").parquet(s"$path/cellstats")
 
-  /** [[ivfDriftCheck]] for the IVF-PQ family: price a delta against
-    * the coarse quantizer's build-time stats ([[ivfPqCellStats]]) in
-    * one bounded delta pass — same two signals (squared-L2 residual
-    * FIT ratio, cell-occupancy SHIFT), same thresholds, same
-    * WARN-and-rebuild contract. The codebook never enters: drift is a
-    * property of the coarse partition; a quantizer whose cells no
-    * longer fit the data mis-buckets rows before any code is read.
+  /** Load the stats artifact persisted by [[saveStats]]. */
+  def loadStats(spark: org.apache.spark.sql.SparkSession,
+                path: String): DataFrame =
+    spark.read.parquet(s"$path/cellstats")
+
+  /** Measure quantizer DRIFT of an append log against a built index —
+    * the signal absorption cannot give (absorbed rows ride cells trained
+    * on an old distribution: recall sinks silently). ONE bounded pass
+    * over the delta: each row assigns exactly as the build would and
+    * folds into a quantizer-sized per-cell (count, distance-sum) frame,
+    * priced against the [[cellStats]] expectations of the cells the
+    * delta actually lands in (FIT) and compared as a cell-occupancy
+    * distribution (SHIFT) — see [[IvfDriftReport]]. Delta rows landing
+    * in cells with no built members are unpriced but count toward the
+    * shift. The indexed corpus is never re-read.
+    *
+    * Defaults from the measured margins (BENCH_NOTES r19): an un-drifted
+    * slice reads ratio ≈ 1.00 ± 0.01 and shift ≈ sampling noise (~0.15
+    * at 71 rows × 16 cells), a planted off-distribution delta shift
+    * ≳ 0.8 — so fit trips at 1.5 and shift at 0.5. WARN-logs like every
+    * self-engaging switch; this is an ACTION (one job over the delta).
     */
-  def ivfPqDriftCheck(stats: DataFrame, coarse: DataFrame,
-                      delta: DataFrame, ratioThreshold: Double = 1.5,
-                      shiftThreshold: Double = 0.5,
-                      twoLevelAssign: Boolean = false,
-                      twoLevelAutoNlist: Int = 512,
-                      idCol: String = "vec_id",
-                      vecCol: String = "embedding"): IvfDriftReport = {
+  def driftCheck[I](stats: DataFrame, index: I, delta: DataFrame,
+                    ratioThreshold: Double = 1.5, shiftThreshold: Double = 0.5,
+                    twoLevelAssign: Boolean = false, candidateGroups: Int = 2,
+                    twoLevelAutoNlist: Int = 512, idCol: String = "vec_id",
+                    vecCol: String = "embedding")
+                   (implicit codec: TrainedCodec[I]): IvfDriftReport = {
     requireIntegralId(delta, idCol)
-    val nlist = coarse.count()
-    val twoLevel = twoLevelAssign || nlist >= twoLevelAutoNlist
-    if (!twoLevelAssign && twoLevel)
-      warnAutoTwoLevel("ivfPqDriftCheck", nlist, twoLevelAutoNlist)
-    // single consumer — materializes once inside driftReport's mix
-    // checkpoint; no second pin needed (r21)
-    val perCell = pqPerCellResiduals(delta, coarse, twoLevel, idCol, vecCol)
-      .select(col("cell"), col("_cnt").as("_dn"), col("_sum").as("_ds"))
-    driftReport(perCell, stats, "cell", "ivfPqDriftCheck",
-      "ivfPqBuild over the grown corpus", ratioThreshold, shiftThreshold)
+    val site = s"${codec.tag}DriftCheck"
+    // single consumer: the delta pass materializes once, inside
+    // driftReport's checkpointed mix
+    driftReport(perCellFold(codec.cellDistances(index, delta,
+      TwoLevel(site, twoLevelAssign, candidateGroups, twoLevelAutoNlist),
+      idCol, vecCol), codec.cellKey), stats, codec.cellKey, site,
+      ratioThreshold, shiftThreshold)
   }
 
-  /** The ONE drift-report core behind [[ivfDriftCheck]] and
-    * [[ivfPqDriftCheck]]: fold a per-cell delta frame (keyCol, _dn,
-    * _ds — ONE delta pass, checkpointed by the caller) against build
+  /** What [[maintain]] did: the absorbed-or-rebuilt index, the drift
+    * report that decided, and which arm ran. Re-derive the stats on
+    * save after a rebuild — the old ones price a quantizer that no
+    * longer exists.
+    */
+  final case class MaintainResult[I](index: I, report: IvfDriftReport,
+                                     rebuilt: Boolean)
+
+  /** The drift→action composition: price the append log against the
+    * persisted build stats ([[driftCheck]]) and route it — a QUIET
+    * delta absorbs ([[absorb]]: bounded delta pass, quantizer
+    * untouched), a DRIFTED one triggers a fresh build over the indexed
+    * rows ∪ delta with the index's own nlist (and, for IVF-PQ, its m and
+    * code count) at the build's default training knobs. IVF indexes
+    * carry their raw vectors; IVF-PQ needs `corpus`, the same handle its
+    * serve path takes as `rerank`.
+    *
+    * EQUIVALENCE (sim33/sim34 and PipelineSpec pin both arms): quiet ⇒
+    * identical to [[absorb]]; drifted ⇒ identical to a fresh build over
+    * the grown corpus (build is value-deterministic).
+    */
+  def maintain[I](index: I, stats: DataFrame, delta: DataFrame,
+                  corpus: Option[DataFrame] = None,
+                  ratioThreshold: Double = 1.5, shiftThreshold: Double = 0.5,
+                  twoLevelAssign: Boolean = false, candidateGroups: Int = 2,
+                  twoLevelAutoNlist: Int = 512, idCol: String = "vec_id",
+                  vecCol: String = "embedding")
+                 (implicit codec: TrainedCodec[I]): MaintainResult[I] = {
+    val report = driftCheck(stats, index, delta, ratioThreshold,
+      shiftThreshold, twoLevelAssign, candidateGroups, twoLevelAutoNlist,
+      idCol, vecCol)
+    if (!report.drifted)
+      MaintainResult(absorb(index, delta, twoLevelAssign, candidateGroups,
+        twoLevelAutoNlist, idCol, vecCol), report, rebuilt = false)
+    else {
+      logger.warn(s"graft ${codec.tag}Maintain: drift verdict REBUILD — " +
+        "re-training the quantizer over the grown corpus instead of " +
+        "absorbing (re-derive stats on save; the old expectations " +
+        "price a quantizer that no longer exists).")
+      val grown = codec.indexedVectors(index, corpus, idCol, vecCol)
+        .unionByName(delta.select(col(idCol).cast(LongType).as(idCol),
+          ivfDbl(col(vecCol)).as(vecCol)))
+      MaintainResult(codec.rebuild(index, grown, TwoLevel(
+        s"${codec.tag}Maintain", twoLevelAssign, candidateGroups,
+        twoLevelAutoNlist), idCol, vecCol), report, rebuilt = true)
+    }
+  }
+
+  /** (key, _dn, _ds): per-cell row count and exact decimal distance sum
+    * — the ONE fold behind both [[cellStats]] and [[driftCheck]], so the
+    * fit ratio always compares like with like.
+    */
+  private def perCellFold(scored: DataFrame, key: String): DataFrame =
+    scored.groupBy(col(key))
+      .agg(count(lit(1)).as("_dn"),
+        sum(col("_d").cast(DecimalType(30, 12))).as("_ds"))
+
+  /** The drift-report core of [[driftCheck]]: fold a per-cell delta
+    * frame (keyCol, _dn, _ds — ONE delta pass) against build
     * stats (keyCol, n, mean_dist) into the fit and shift signals.
     * Everything here is quantizer-sized.
     */
   private def driftReport(perCell: DataFrame, stats: DataFrame,
-                          keyCol: String, site: String, rebuildHint: String,
+                          keyCol: String, site: String,
                           ratioThreshold: Double,
                           shiftThreshold: Double): IvfDriftReport = {
     require(ratioThreshold > 0.0, "ratioThreshold must be positive")
@@ -1872,39 +1872,18 @@ object Similarity {
         f"rows, cell-occupancy shift $shift%.4f (trip > " +
         f"$shiftThreshold%.2f: $shiftTrip) over $dTot%d delta rows. " +
         "Absorbing into this index degrades recall silently; REBUILD " +
-        s"instead ($rebuildHint).")
+        "instead (maintain rebuilds over the grown corpus).")
     IvfDriftReport(dTot, priced, dm, em, shift, fitTrip || shiftTrip)
   }
 
-  /** Delete vectors from a built [[IvfIndex]] by id — the absorb
-    * machinery's mirror image, and the operation a training-data
-    * pipeline legally cannot run without (right-to-be-forgotten,
-    * license revocation): the cell table drops the tombstoned rows in
-    * one bounded anti-join on the id key; the quantizer is untouched
-    * (deletion never retrains — cells keep their built centroids, the
-    * surviving rows their assignments). `tombstones`' FIRST column is
-    * the id set, broadcast — a deletion request list is metadata-sized
-    * by nature, so the corpus-sized cell side is never shuffled; the
-    * rewrite happens when the caller [[IvfIndex.save]]s the returned
-    * index (write-new over the cells artifact, like absorb).
-    *
-    * EQUIVALENCE (PipelineSpec pins it): because assignment is
-    * per-row, the deleted index is IDENTICAL to assigning only the
-    * survivors against the same quantizer — serve-after-delete returns
-    * no deleted id and scores exactly the surviving cells, so recall
-    * floors transfer to the surviving corpus unchanged. Mass deletion
-    * can empty cells (fine — probes just find fewer) and, like many
-    * absorptions, SKEW the live distribution away from the built
-    * quantizer: the drift signal ([[ivfDriftCheck]]) and a rebuild
-    * remain the answer when deletion stops being incremental.
-    */
   /** Cast a tombstone id to the store's own id type, RAISING on a
     * lossy cast instead of nulling it: a null tombstone matches
     * nothing in the anti-join, and a deletion API that silently skips
     * an unparseable id "succeeds" having deleted zero rows — the exact
-    * failure mode requireIntegralId exists to prevent, applied at the
-    * four right-to-be-forgotten entry points (ivfDeleteIds /
-    * ivfPqDeleteIds / deleteFromRegistry / cdcDeleteKeys).
+    * failure mode requireIntegralId exists to prevent, applied at
+    * every right-to-be-forgotten entry point ([[delete]],
+    * `Dedup.deleteFromHammingRegistry`, the StreamingJobs registry,
+    * CDC and delta-log deletes).
     */
   private[graft] def castTombstone(c: Column, to: org.apache.spark.sql.types.DataType,
                                    site: String): Column = {
@@ -1922,156 +1901,20 @@ object Similarity {
       .otherwise(tc)
   }
 
-  def ivfDeleteIds(index: IvfIndex, tombstones: DataFrame): IvfIndex = {
-    val tCol = tombstones.columns.head
-    IvfIndex(index.centroids,
-      index.cells.join(
-        broadcast(tombstones
-          .select(castTombstone(col(tCol), LongType, "ivfDeleteIds")
-            .as("cid"))
-          .distinct()),
-        Seq("cid"), "left_anti"))
-  }
-
-  /** [[ivfDeleteIds]] on the production architecture: the integer
-    * codes table drops the tombstoned rows (one broadcast anti-join on
-    * the id key); coarse quantizer and codebook are untouched. The
-    * caller's re-rank corpus must likewise stop carrying the deleted
-    * rows — the raw-vector side lives outside the index by contract,
-    * and a deleted id can only re-enter serving through a stale
-    * re-rank source (it can never be SHORTLISTED: its codes are gone),
-    * so delete from both stores on the same cadence.
+  /** `rows` minus the tombstoned ids: `tombstones`' first column, cast
+    * to the type of `rows`' `idCol` ([[castTombstone]] — a lossy id
+    * raises, naming `site`), deduplicated and BROADCAST into a left
+    * anti-join, so the corpus-sized side is never shuffled.
     */
-  def ivfPqDeleteIds(index: IvfPqIndex, tombstones: DataFrame): IvfPqIndex = {
-    val tCol = tombstones.columns.head
-    IvfPqIndex(index.coarse, index.codebook,
-      index.codes.join(
-        broadcast(tombstones
-          .select(castTombstone(col(tCol), index.codes.schema("cid").dataType,
-            "ivfPqDeleteIds").as("cid"))
-          .distinct()),
-        Seq("cid"), "left_anti"), index.builtM)
-  }
-
-  /** What [[ivfMaintain]] did and why: the absorbed-or-rebuilt index,
-    * the drift report that decided, and which arm ran. The caller
-    * persists `index` (and re-derives stats with [[ivfSaveStats]] /
-    * [[ivfPqSaveStats]] on the same save — after a rebuild the old
-    * stats price against a quantizer that no longer exists).
-    */
-  final case class IvfMaintainResult(index: IvfIndex,
-                                     report: IvfDriftReport,
-                                     rebuilt: Boolean)
-
-  /** The drift→action composition the signals were built for — closes
-    * the loop sim20/sim25 left as prose and [[ivfDriftCheck]] (sim29)
-    * made measurable but not actionable: ONE maintenance entry point
-    * that prices the append log against the persisted build stats and
-    * routes it — a QUIET delta absorbs ([[ivfAbsorbDelta]]: bounded
-    * delta pass, quantizer untouched, the cheap arm that is correct
-    * almost always), a DRIFTED delta triggers the rebuild the absorb
-    * would silently degrade ([[ivfBuild]] over the grown corpus — the
-    * indexed rows come from the index's own cell table, which carries
-    * the raw vectors, so no external corpus handle is needed; the
-    * quantizer re-trains on the distribution it will actually serve).
-    * Run it on the absorb cadence; the drift check it fronts is one
-    * bounded delta pass, so the quiet path costs what plain absorption
-    * cost, and the rebuild path costs what the rebuild always cost —
-    * now spent exactly when the measurement says it must be.
-    *
-    * EQUIVALENCE (sim33 pins both arms): quiet ⇒ the returned index
-    * serves row-for-row as [[ivfAbsorbDelta]]'s; drifted ⇒ row-for-row
-    * as a fresh [[ivfBuild]] over the grown corpus (build is
-    * value-deterministic — hash-seeded centroids, per-row argmin — so
-    * reconstruction from the cell table changes nothing). Rebuild
-    * keeps the index's own nlist; `rebuildIters`/`rebuildSampleMod`
-    * pass through to [[ivfBuild]] (defaults = build defaults).
-    */
-  def ivfMaintain(index: IvfIndex, stats: DataFrame, delta: DataFrame,
-                  ratioThreshold: Double = 1.5,
-                  shiftThreshold: Double = 0.5,
-                  rebuildIters: Int = 0, rebuildSampleMod: Int = 4,
-                  twoLevelAssign: Boolean = false,
-                  candidateGroups: Int = 2,
-                  twoLevelAutoNlist: Int = 512,
-                  idCol: String = "vec_id",
-                  vecCol: String = "embedding"): IvfMaintainResult = {
-    val report = ivfDriftCheck(stats, index.centroids, delta,
-      ratioThreshold, shiftThreshold, twoLevelAssign, candidateGroups,
-      twoLevelAutoNlist, idCol, vecCol)
-    if (!report.drifted)
-      IvfMaintainResult(ivfAbsorbDelta(index, delta, twoLevelAssign,
-        candidateGroups, twoLevelAutoNlist, idCol, vecCol),
-        report, rebuilt = false)
-    else {
-      logger.warn("graft ivfMaintain: drift verdict REBUILD — " +
-        "re-training the quantizer over the grown corpus instead of " +
-        "absorbing (re-derive stats on save; the old expectations " +
-        "price a quantizer that no longer exists).")
-      val nlist = index.centroids.count().toInt // quantizer-sized
-      val grown = index.cells
-        .select(col("cid").cast(LongType).as(idCol), col("cv").as(vecCol))
-        .unionByName(delta.select(col(idCol).cast(LongType).as(idCol),
-          ivfDbl(col(vecCol)).as(vecCol)))
-      IvfMaintainResult(ivfBuild(grown, nlist, rebuildIters,
-        rebuildSampleMod, twoLevelAssign, candidateGroups,
-        twoLevelAutoNlist, idCol, vecCol), report, rebuilt = true)
-    }
-  }
-
-  /** [[ivfMaintain]]'s result on the production architecture. */
-  final case class IvfPqMaintainResult(index: IvfPqIndex,
-                                       report: IvfDriftReport,
-                                       rebuilt: Boolean)
-
-  /** [[ivfMaintain]] on the production architecture: price the delta
-    * with [[ivfPqDriftCheck]] (squared-L2 residuals — the metric the
-    * ADC path ranks by), absorb if quiet, rebuild if drifted. Unlike
-    * plain IVF the index CANNOT reconstruct its corpus (the codes
-    * table is quantized — residuals are lossy), so the raw `corpus`
-    * rides in explicitly — it is the same handle the serve path
-    * already requires as `rerank`, per the IvfPqIndex contract that
-    * raw vectors live outside the index. Rebuild keeps the index's own
-    * nlist and m (m derived from the codebook when not caller-known,
-    * the [[ivfPqSearch]] pattern); `codes` cannot be derived from a
-    * possibly-gapped codebook, so pass the build's own value when it
-    * wasn't the default.
-    */
-  def ivfPqMaintain(index: IvfPqIndex, stats: DataFrame,
-                    corpus: DataFrame, delta: DataFrame,
-                    ratioThreshold: Double = 1.5,
-                    shiftThreshold: Double = 0.5,
-                    m: Int = -1, codes: Int = 32, refineIters: Int = 0,
-                    twoLevelAssign: Boolean = false,
-                    twoLevelAutoNlist: Int = 512,
-                    idCol: String = "vec_id",
-                    vecCol: String = "embedding"): IvfPqMaintainResult = {
-    val report = ivfPqDriftCheck(stats, index.coarse, delta,
-      ratioThreshold, shiftThreshold, twoLevelAssign, twoLevelAutoNlist,
-      idCol, vecCol)
-    if (!report.drifted)
-      IvfPqMaintainResult(ivfPqAbsorbDelta(index, delta, m,
-        twoLevelAssign, twoLevelAutoNlist, idCol, vecCol),
-        report, rebuilt = false)
-    else {
-      logger.warn("graft ivfPqMaintain: drift verdict REBUILD — " +
-        "re-training coarse quantizer and codebook over the grown " +
-        "corpus instead of absorbing (re-derive stats on save).")
-      val nlist = index.coarse.count().toInt // quantizer-sized
-      val mEff =
-        if (m > 0) m
-        else index.builtM.getOrElse(
-          index.codebook.agg(max(col("sub"))).head().getInt(0) + 1)
-      val grown = corpus
-        .select(col(idCol).cast(LongType).as(idCol),
-          ivfDbl(col(vecCol)).as(vecCol))
-        .unionByName(delta.select(col(idCol).cast(LongType).as(idCol),
-          ivfDbl(col(vecCol)).as(vecCol)))
-      IvfPqMaintainResult(ivfPqBuild(grown, nlist, mEff, codes,
-        refineIters, twoLevelAssign, twoLevelAutoNlist, idCol, vecCol),
-        report, rebuilt = true)
-    }
-  }
+  private[graft] def dropTombstoned(rows: DataFrame, idCol: String,
+                                    tombstones: DataFrame,
+                                    site: String): DataFrame =
+    rows.join(
+      broadcast(tombstones
+        .select(castTombstone(col(tombstones.columns.head),
+          rows.schema(idCol).dataType, site).as(idCol))
+        .distinct()),
+      Seq(idCol), "left_anti")
 
   private def ivfPairs(queries: DataFrame, index: IvfIndex, nprobe: Int,
                        twoLevelAssign: Boolean, leaderGroups: Int,
@@ -2111,13 +1954,19 @@ object Similarity {
         (ivfDot(col("qv"), col("cv")) / (col("qn") * col("cn"))).as("sim"))
   }
 
-  private def presentTopK(pairs: DataFrame, k: Int): DataFrame =
+  /** The bounded per-query top-`k` of a (qid, cid, `score`) pair
+    * stream as (qid, cid, `score`, rank), (qid, rank)-ordered: a TopKAgg
+    * partial aggregate, so the exchange carries ≤ k pairs per (query ×
+    * partition). Highest score first — lowest with `ascending`, for
+    * distances; ties by cid.
+    */
+  private def presentTopK(pairs: DataFrame, k: Int, score: String = "sim",
+                          ascending: Boolean = false): DataFrame =
     pairs
       .groupBy(col("qid"))
-      .agg(TopKAgg.top_k(col("sim"), col("cid"), k, ascending = false)
-        .as("_tk"))
+      .agg(TopKAgg.top_k(col(score), col("cid"), k, ascending).as("_tk"))
       .select(col("qid"), posexplode(col("_tk")))
-      .select(col("qid"), col("col.id").as("cid"), col("col.score").as("sim"),
+      .select(col("qid"), col("col.id").as("cid"), col("col.score").as(score),
         (col("pos") + 1).cast(LongType).as("rank"))
       .orderBy("qid", "rank")
 
@@ -2301,63 +2150,6 @@ object Similarity {
     df.select(col(idCol).cast(LongType).as(idCol),
       graft.functions.VecKernels.binary_code(col(vecCol)).as("code"))
 
-  /** Delete vectors from a binary-quantized code store by id — the
-    * right-to-be-forgotten arm of the BQ family, closing the lifecycle
-    * matrix's last column (registry dd22, IVF/IVF-PQ sim27/sim28, CDC
-    * st13, delta log st14 all ship it; a user who adopted the sim24
-    * persisted-codes shape for its measured 64× byte win could until
-    * now not un-index a document without a full re-encode): the code
-    * table drops the tombstoned rows in ONE bounded broadcast
-    * anti-join on the id key — `tombstones`' FIRST column is the id
-    * set, metadata-sized by nature, so the corpus-sized code side is
-    * never shuffled. There is NO quantizer to touch (the encoder is
-    * per-row sign bits — stateless), so deletion here is even simpler
-    * than sim27's: the deleted store IS [[binaryCodes]] over the
-    * survivors, row-for-row, by construction. The rewrite lands when
-    * the caller persists the returned frame (write-new over the codes
-    * artifact, like every index save here); the re-rank corpus must
-    * stop carrying the deleted rows on the same cadence — a deleted id
-    * can never be SHORTLISTED (its code row is gone), so a stale
-    * re-rank side is the only path back into serving, exactly the
-    * [[ivfPqDeleteIds]] contract.
-    */
-  def bqDeleteIds(codes: DataFrame, tombstones: DataFrame,
-                  idCol: String = "vec_id"): DataFrame = {
-    val tCol = tombstones.columns.head
-    codes.join(
-      broadcast(tombstones
-        .select(castTombstone(col(tCol), codes.schema(idCol).dataType,
-          "bqDeleteIds").as(idCol))
-        .distinct()),
-      Seq(idCol), "left_anti")
-  }
-
-  /** Fold an append log into a binary-quantized code store —
-    * [[ivfAbsorbDelta]]'s contract on the BQ family, and the one place
-    * in the index-lifecycle matrix where absorption is EXACT rather
-    * than a recall trade: the sign-bit encoder has no trained state
-    * (no centroids, no codebook — each row's code is a pure function
-    * of that row), so absorbed rows serve bit-identically to
-    * built-at-rest rows, a second absorb of the same store composes,
-    * and the quantizer-DRIFT column of the lifecycle matrix
-    * (sim29/sim30's ivfDriftCheck) is VACUOUS here by construction —
-    * there is nothing trainable to drift, hence no drift signal and no
-    * rebuild cadence; the BQ lifecycle closes with delete + absorb
-    * alone. Delta rows encode through the ONE shared [[binaryCodes]]
-    * definition and append; at rest this is a parquet append of
-    * `binaryCodes(delta)` — delta-sized IO, nothing rewritten (the
-    * SimilaritySpec pins append-file ≡ this union row-for-row). Same
-    * disjointness contract as every absorb: `delta` is the append log,
-    * its ids must not already be in `codes` (a row in both would hold
-    * two shortlist slots).
-    */
-  def bqAbsorbDelta(codes: DataFrame, delta: DataFrame,
-                    idCol: String = "vec_id",
-                    vecCol: String = "embedding"): DataFrame = {
-    requireIntegralId(delta, idCol)
-    codes.unionByName(binaryCodes(delta, idCol, vecCol))
-  }
-
   /** Serve [[bqTopK]] against PRE-BUILT codes ([[binaryCodes]] output,
     * typically a persisted parquet table): the hamming scan reads ONLY
     * the ⌈d/64⌉-long code column — 1/64th the bytes of the raw doubles,
@@ -2392,19 +2184,12 @@ object Similarity {
     // the kernel fuses the per-element double→DECIMAL(12,6) cast, so
     // the raw candidate array feeds it directly (same values as the
     // old dec(_craw) projection — VecKernelsSpec pins both input forms)
-    cvRaw.join(broadcast(sl), "cid").join(broadcast(qv), "qid")
+    presentTopK(cvRaw.join(broadcast(sl), "cid").join(broadcast(qv), "qid")
       .select(col("qid"), col("cid"),
         (vec_dot_dec(col("_qv"), col("_craw")).cast(DoubleType) /
           sqrt(col("_qn").cast(DoubleType) *
             vec_dot_dec(col("_craw"), col("_craw")).cast(DoubleType)))
-          .as("sim"))
-      .groupBy(col("qid"))
-      .agg(TopKAgg.top_k(col("sim"), col("cid"), k, ascending = false)
-        .as("_tk"))
-      .select(col("qid"), posexplode(col("_tk")))
-      .select(col("qid"), col("col.id").as("cid"), col("col.score").as("sim"),
-        (col("pos") + 1).cast(LongType).as("rank"))
-      .orderBy("qid", "rank")
+          .as("sim")), k)
   }
 
   def bqSearch(queries: DataFrame, codes: DataFrame, rerank: DataFrame,

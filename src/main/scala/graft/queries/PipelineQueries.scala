@@ -3531,7 +3531,7 @@ object PipelineQueries {
 
     // DELTA REABSORPTION — the lifecycle step sim20 leaves open ("a
     // growing delta IS the rebuild signal", but a full rebuild
-    // re-clusters and re-reads the whole corpus): ivfAbsorbDelta
+    // re-clusters and re-reads the whole corpus): absorb
     // assigns the append log to the EXISTING quantizer's cells in one
     // bounded pass over the DELTA and appends to the cell table — the
     // quantizer never retrains, the indexed corpus is never re-read,
@@ -3549,7 +3549,7 @@ object PipelineQueries {
       val e = emb(s, dir)
       val q = e.filter(col("vec_id") < 10)
       val stale = Similarity.ivfBuild(e.filter(col("vec_id") % 10 =!= 9))
-      val absorbed = Similarity.ivfAbsorbDelta(stale,
+      val absorbed = Similarity.absorb(stale,
         e.filter(col("vec_id") % 10 === 9))
       recallFloor(Similarity.cosineTopK(q, e, 5),
         Similarity.ivfSearch(q, absorbed, 5), floorPct = 85)
@@ -3570,14 +3570,14 @@ object PipelineQueries {
       val e = emb(s, dir)
       val q = e.filter(col("vec_id") < 10)
       val stale = Similarity.ivfPqBuild(e.filter(col("vec_id") % 10 =!= 9))
-      val absorbed = Similarity.ivfPqAbsorbDelta(stale,
+      val absorbed = Similarity.absorb(stale,
         e.filter(col("vec_id") % 10 === 9))
       recallFloor(Similarity.l2TopK(q, e, 5),
         Similarity.ivfPqSearch(q, absorbed, e, 5), floorPct = 80)
     },
 
     // Index DELETION — absorb's mirror image and the lifecycle arm a
-    // training pipeline legally cannot run without: ivfDeleteIds drops
+    // training pipeline legally cannot run without: delete drops
     // the % 10 == 9 slice from the cell table (broadcast anti-join on
     // the id key; the quantizer never retrains) and the served
     // shortlist must (a) contain NO deleted id — certainty, their
@@ -3600,7 +3600,7 @@ object PipelineQueries {
       val tomb = e.filter(col("vec_id") % 10 === 9).select("vec_id")
       val surv = e.filter(col("vec_id") % 10 =!= 9)
       val served = Similarity.ivfSearch(q,
-        Similarity.ivfDeleteIds(Similarity.ivfBuild(e), tomb), 5)
+        Similarity.delete(Similarity.ivfBuild(e), tomb), 5)
         .localCheckpoint() // two consumers: recall + the deleted-id scan
       val leaked = served.join(tomb.select(col("vec_id").as("cid")), Seq("cid"))
         .agg(when(count(lit(1)) === 0, 1L).otherwise(0L).as("none_deleted"))
@@ -3629,7 +3629,7 @@ object PipelineQueries {
       val tomb = e.filter(col("vec_id") % 10 === 9).select("vec_id")
       val surv = e.filter(col("vec_id") % 10 =!= 9)
       val served = Similarity.ivfPqSearch(q,
-        Similarity.ivfPqDeleteIds(Similarity.ivfPqBuild(e), tomb), surv, 5)
+        Similarity.delete(Similarity.ivfPqBuild(e), tomb), surv, 5)
         .localCheckpoint()
       val leaked = served.join(tomb.select(col("vec_id").as("cid")), Seq("cid"))
         .agg(when(count(lit(1)) === 0, 1L).otherwise(0L).as("none_deleted"))
@@ -3641,15 +3641,15 @@ object PipelineQueries {
     // absorb-vs-rebuild, which sim20/sim22 left as prose ("a growing
     // delta IS the rebuild signal") and sim25/sim26's absorption
     // cannot provide (after many absorptions the quantizer degrades
-    // silently): ivfDriftCheck prices a delta against the persisted
-    // per-cell build stats (ivfCellStats, the third index artifact) in
+    // silently): driftCheck prices a delta against the persisted
+    // per-cell build stats (cellStats, the third index artifact) in
     // one bounded delta pass — fit ratio vs the build's per-cell mean
     // assignment distance, plus cell-occupancy shift (total variation)
     // for the isotropic regime where any direction FITS but lands
     // wrong. Invariant gate at all three SFs: an un-drifted corpus
     // slice must NOT trip (ratio ≈ 1, shift ≈ sampling noise), the
     // same slice pushed off-distribution MUST (measured shift ≥ 0.80
-    // vs the 0.5 threshold; DriftProbe/BENCH_NOTES r19).
+    // vs the 0.5 threshold; BENCH_NOTES r19).
     QueryDef("sim29_ivf_drift",
       """SELECT CAST(c.n AS BIGINT) AS n_delta,
         |  CAST(0 AS BIGINT) AS clean_trips,
@@ -3658,13 +3658,13 @@ object PipelineQueries {
         |      WHERE vec_id % 7 = 3) c""".stripMargin) { (s, dir) =>
       val e = emb(s, dir)
       val idx = Similarity.ivfBuild(e)
-      val stats = Similarity.ivfCellStats(idx).localCheckpoint()
+      val stats = Similarity.cellStats(idx).localCheckpoint()
       val slice = e.filter(col("vec_id") % 7 === 3)
         .select("vec_id", "embedding")
-      val clean = Similarity.ivfDriftCheck(stats, idx.centroids, slice)
+      val clean = Similarity.driftCheck(stats, idx, slice)
       val shifted = slice.select(col("vec_id"),
         transform(col("embedding"), x => x + lit(2.0)).as("embedding"))
-      val moved = Similarity.ivfDriftCheck(stats, idx.centroids, shifted)
+      val moved = Similarity.driftCheck(stats, idx, shifted)
       s.range(1).select(lit(clean.nDelta).as("n_delta"),
         lit(if (clean.drifted) 1L else 0L).as("clean_trips"),
         lit(if (moved.drifted) 1L else 0L).as("drifted_trips"))
@@ -3687,27 +3687,27 @@ object PipelineQueries {
         |      WHERE vec_id % 7 = 3) c""".stripMargin) { (s, dir) =>
       val e = emb(s, dir)
       val idx = Similarity.ivfPqBuild(e)
-      val stats = Similarity.ivfPqCellStats(idx, e).localCheckpoint()
+      val stats = Similarity.cellStats(idx, Some(e)).localCheckpoint()
       val slice = e.filter(col("vec_id") % 7 === 3)
         .select("vec_id", "embedding")
-      val clean = Similarity.ivfPqDriftCheck(stats, idx.coarse, slice)
+      val clean = Similarity.driftCheck(stats, idx, slice)
       val shifted = slice.select(col("vec_id"),
         transform(col("embedding"), x => x + lit(2.0)).as("embedding"))
-      val moved = Similarity.ivfPqDriftCheck(stats, idx.coarse, shifted)
+      val moved = Similarity.driftCheck(stats, idx, shifted)
       s.range(1).select(lit(clean.nDelta).as("n_delta"),
         lit(if (clean.drifted) 1L else 0L).as("clean_trips"),
         lit(if (moved.drifted) 1L else 0L).as("drifted_trips"))
     },
 
     // DRIFT→ACTION composition — the maintain entry point that closes
-    // the loop sim29 measured: ivfMaintain prices the delta against
+    // the loop sim29 measured: maintain prices the delta against
     // the persisted build stats and routes it, absorb when quiet,
     // rebuild when drifted. Invariant gate, both arms equivalence-
     // checked row-for-row (build is value-deterministic, so the
     // routed result must be IDENTICAL to calling the arm directly —
     // zero mismatches, not a floor): a clean clone of a corpus slice
     // (at fresh ids — absorb's disjointness contract) must take the
-    // absorb arm and serve exactly as ivfAbsorbDelta's index; the
+    // absorb arm and serve exactly as absorb's index; the
     // same clone pushed off-distribution must take the rebuild arm
     // and serve exactly as a fresh ivfBuild over the grown corpus.
     QueryDef("sim33_ivf_maintain",
@@ -3730,16 +3730,16 @@ object PipelineQueries {
       val idx0 = Similarity.ivfBuild(e)
       val idx = Similarity.IvfIndex(idx0.centroids,
         idx0.cells.localCheckpoint())
-      val stats = Similarity.ivfCellStats(idx).localCheckpoint()
+      val stats = Similarity.cellStats(idx).localCheckpoint()
       val slice = e.filter(col("vec_id") % 7 === 3)
         .select((col("vec_id") + 200000L).as("vec_id"), col("embedding"))
-      val quiet = Similarity.ivfMaintain(idx, stats, slice)
+      val quiet = Similarity.maintain(idx, stats, slice)
       val qm = rankMismatches(
         Similarity.ivfSearch(q, quiet.index, 5),
-        Similarity.ivfSearch(q, Similarity.ivfAbsorbDelta(idx, slice), 5))
+        Similarity.ivfSearch(q, Similarity.absorb(idx, slice), 5))
       val shifted = slice.select(col("vec_id"),
         transform(col("embedding"), x => x + lit(2.0)).as("embedding"))
-      val moved = Similarity.ivfMaintain(idx, stats, shifted)
+      val moved = Similarity.maintain(idx, stats, shifted)
       val grown = e
         .select(col("vec_id"),
           transform(col("embedding"), x => x.cast(DoubleType))
@@ -3755,7 +3755,7 @@ object PipelineQueries {
         lit(dm).as("drift_mismatch"))
     },
 
-    // sim33 on the PRODUCTION architecture: ivfPqMaintain routes on
+    // sim33 on the PRODUCTION architecture: maintain routes on
     // the squared-L2 residual signal (sim30) and rebuilds BOTH
     // quantizers when it trips — the raw corpus rides in explicitly
     // (codes are lossy; it is the same handle the serve path already
@@ -3782,18 +3782,18 @@ object PipelineQueries {
       val idx = Similarity.IvfPqIndex(idx0.coarse,
         idx0.codebook, idx0.codes.localCheckpoint(),
         idx0.builtM)
-      val stats = Similarity.ivfPqCellStats(idx, e).localCheckpoint()
+      val stats = Similarity.cellStats(idx, Some(e)).localCheckpoint()
       val slice = e.filter(col("vec_id") % 7 === 3)
         .select((col("vec_id") + 200000L).as("vec_id"), col("embedding"))
       val rerankQuiet = e.select("vec_id", "embedding").unionByName(slice)
-      val quiet = Similarity.ivfPqMaintain(idx, stats, e, slice)
+      val quiet = Similarity.maintain(idx, stats, slice, Some(e))
       val qm = rankMismatches(
         Similarity.ivfPqSearch(q, quiet.index, rerankQuiet, 5),
-        Similarity.ivfPqSearch(q, Similarity.ivfPqAbsorbDelta(idx, slice),
+        Similarity.ivfPqSearch(q, Similarity.absorb(idx, slice),
           rerankQuiet, 5))
       val shifted = slice.select(col("vec_id"),
         transform(col("embedding"), x => x + lit(2.0)).as("embedding"))
-      val moved = Similarity.ivfPqMaintain(idx, stats, e, shifted)
+      val moved = Similarity.maintain(idx, stats, shifted, Some(e))
       val grown = e
         .select(col("vec_id"),
           transform(col("embedding"), x => x.cast(DoubleType))
@@ -3878,7 +3878,7 @@ object PipelineQueries {
 
     // BQ code-store DELETION — the last column of the lifecycle
     // matrix (registry dd22, IVF/IVF-PQ sim27/sim28, CDC st13, delta
-    // log st14): bqDeleteIds drops the % 10 == 9 slice from the
+    // log st14): delete drops the % 10 == 9 slice from the
     // PERSISTED code table (broadcast anti-join on the id key; there
     // is no quantizer to touch — the encoder is stateless sign bits),
     // and because the deleted store IS binaryCodes over the survivors
@@ -3894,10 +3894,10 @@ object PipelineQueries {
       val surv = e.filter(col("vec_id") % 10 =!= 9)
       val codesDir = gateWork(s, "sim31", dir)
       Similarity.binaryCodes(e).write.mode("overwrite").parquet(codesDir)
-      val deleted = Similarity.bqDeleteIds(s.read.parquet(codesDir),
+      val deleted = Similarity.delete(s.read.parquet(codesDir),
         e.filter(col("vec_id") % 10 === 9).select("vec_id"))
       // re-rank side drops the rows on the same cadence (the
-      // bqDeleteIds/ivfPqDeleteIds contract: codes gone = never
+      // delete contract: codes gone = never
       // shortlisted; a stale re-rank source is the only path back)
       val served = Similarity.bqSearch(q, deleted, surv, 5)
       val res = served.localCheckpoint()
@@ -3906,7 +3906,7 @@ object PipelineQueries {
       res
     },
 
-    // BQ code-store ABSORPTION — ivfAbsorbDelta's contract on the BQ
+    // BQ code-store ABSORPTION — absorb's contract on the BQ
     // family, and the one absorb in the matrix that is EXACT rather
     // than a recall trade: the sign-bit encoder has no trained state,
     // so the absorbed store is bit-identical to building at rest over
@@ -3923,7 +3923,7 @@ object PipelineQueries {
       val codesDir = gateWork(s, "sim32", dir)
       Similarity.binaryCodes(e.filter(col("vec_id") % 5 =!= 2))
         .write.mode("overwrite").parquet(codesDir)
-      val absorbed = Similarity.bqAbsorbDelta(s.read.parquet(codesDir),
+      val absorbed = Similarity.absorb(s.read.parquet(codesDir),
         e.filter(col("vec_id") % 5 === 2))
       val served = Similarity.bqSearch(q, absorbed, e, 5)
       val res = served.localCheckpoint()
@@ -5867,7 +5867,7 @@ object PipelineQueries {
           col("vec_id") % 20 === 19).select("vec_id")
       graft.streaming.StreamingJobs.deltaLogDeleteIds(s, work, tomb)
       val served = Similarity.ivfSearchWithDelta(q,
-          Similarity.ivfDeleteIds(stale, tomb),
+          Similarity.delete(stale, tomb),
           graft.streaming.StreamingJobs.deltaLog(s, work), 5)
         .localCheckpoint() // two consumers: recall + the deleted-id scan
       val leaked = served.join(tomb.select(col("vec_id").as("cid")), Seq("cid"))
@@ -5886,7 +5886,7 @@ object PipelineQueries {
 
     // DELTA-LOG ABSORPTION + GC — st11's contract ("absorb empties the
     // log") as an OPERATOR over the on-disk artifacts, the dd21
-    // discipline applied to the vector lifecycle: ivfAbsorbLog loads
+    // discipline applied to the vector lifecycle: absorbLog loads
     // the persisted index, folds every landed batch in one bounded
     // delta pass (the quantizer never retrains, the corpus is never
     // re-read), swaps the index directory write-new/rename-swap with
@@ -5923,9 +5923,9 @@ object PipelineQueries {
         landPhase(work, in, 1, e.filter(col("vec_id") % 20 === 19))
         s0.processAllAvailable()
       } finally s0.stop()
-      val absorbed = graft.streaming.StreamingJobs.ivfAbsorbLog(
+      val absorbed = graft.streaming.StreamingJobs.absorbLog[Similarity.IvfIndex](
         s, s"$work/idx", work)
-      val noop = graft.streaming.StreamingJobs.ivfAbsorbLog(
+      val noop = graft.streaming.StreamingJobs.absorbLog[Similarity.IvfIndex](
         s, s"$work/idx", work)
       val remaining = workFs.listStatus(
           new org.apache.hadoop.fs.Path(s"$work/delta"))
@@ -5982,9 +5982,9 @@ object PipelineQueries {
         landPhase(work, in, 1, e.filter(col("vec_id") % 20 === 19))
         s0.processAllAvailable()
       } finally s0.stop()
-      val absorbed = graft.streaming.StreamingJobs.ivfPqAbsorbLog(
+      val absorbed = graft.streaming.StreamingJobs.absorbLog[Similarity.IvfPqIndex](
         s, s"$work/idx", work)
-      val noop = graft.streaming.StreamingJobs.ivfPqAbsorbLog(
+      val noop = graft.streaming.StreamingJobs.absorbLog[Similarity.IvfPqIndex](
         s, s"$work/idx", work)
       val remaining = workFs.listStatus(
           new org.apache.hadoop.fs.Path(s"$work/delta"))

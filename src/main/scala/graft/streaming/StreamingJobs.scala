@@ -531,7 +531,7 @@ object StreamingJobs {
     * forgotten arm of the st08 lifecycle, completing the
     * delete-everywhere story (signature registry:
     * [[deleteFromRegistry]]; vector indexes:
-    * `Similarity.ivfDeleteIds`/`ivfPqDeleteIds`; keyed CDC state:
+    * `Similarity.delete`; keyed CDC state:
     * here). `keys`' FIRST column is the tombstone set (cast to the
     * table's own key type — the cast must precede the bucket hash,
     * xxhash64 is type-sensitive); only the buckets actually holding a
@@ -1238,7 +1238,7 @@ object StreamingJobs {
     * [[graft.operators.Similarity.ivfSearchWithDelta]] serves against
     * the stale snapshot MID-STREAM (the delta arm scores appended rows
     * exactly, so a vector is searchable the moment its batch lands),
-    * and [[ivfAbsorbLog]] / [[ivfPqAbsorbLog]] fold it into the
+    * and [[absorbLog]] folds it into the
     * persisted index on the rebuild cadence, emptying the log;
     * [[deltaLogDeleteIds]] is the log's right-to-be-forgotten arm.
     *
@@ -1259,14 +1259,14 @@ object StreamingJobs {
       }.start()
 
   /** The append log [[vectorDeltaStream]] maintains, as the one frame
-    * `ivfSearchWithDelta` / `ivfAbsorbDelta` take: every vector landed
+    * `ivfSearchWithDelta` / `Similarity.absorb` take: every vector landed
     * by any batch so far (batch key dropped — the log is a set of
     * appended rows; per-batch lineage lives in the directory layout).
     *
     * Refuses to read over the maintenance markers
     * (`delta_predelete` from an interrupted [[deltaLogDeleteIds]],
-    * `delta_absorbed` from an interrupted [[ivfAbsorbLog]] /
-    * [[ivfPqAbsorbLog]]): while either exists, rows are mid-move and a
+    * `delta_absorbed` from an interrupted [[absorbLog]]): while
+    * either exists, rows are mid-move and a
     * read would silently serve a log that resurrects deleted vectors
     * or drops absorbed-but-not-yet-indexed ones — the screenBatch
     * fail-loud posture, applied to the read path.
@@ -1321,8 +1321,8 @@ object StreamingJobs {
   /** Delete vectors from the streaming append log by id — the
     * right-to-be-forgotten arm of the st11 delta-log lifecycle,
     * closing the one hole the delete-everywhere story (registry
-    * [[deleteFromRegistry]], vector indexes `Similarity.ivfDeleteIds`/
-    * `ivfPqDeleteIds`, keyed CDC state [[cdcDeleteKeys]]) left open:
+    * [[deleteFromRegistry]], vector indexes `Similarity.delete`,
+    * keyed CDC state [[cdcDeleteKeys]]) left open:
     * deleting an id from the PERSISTED index does nothing to a copy of
     * it still sitting in the not-yet-absorbed log, and
     * `ivfSearchWithDelta`'s delta arm scores every log row EXACTLY —
@@ -1421,62 +1421,20 @@ object StreamingJobs {
     spark.read.parquet(batchDir)
       .join(broadcast(tomb), Seq(idCol), "left_anti")
 
-  /** Fold the persisted delta log into the persisted [[graft.operators.
-    * Similarity.IvfIndex]] at `indexPath` and GC the absorbed batch
-    * directories — `ivfAbsorbDelta` run against the ON-DISK artifacts,
-    * turning the st11 contract's prose ("absorb empties the log") into
-    * an operator, exactly as dd21 did for the registry's "compact
-    * eventually". One bounded pass over the DELTA (the quantizer never
-    * retrains, the indexed corpus is never re-read), then a
-    * write-new / rename-swap of the index directory and removal of the
-    * absorbed `delta/batch=N` directories, so the log's remaining
-    * bytes are exactly the rows the index does NOT yet hold — the
-    * disjointness invariant `ivfSearchWithDelta` serves by. Returns
-    * the absorbed batch ids (empty when the log held nothing).
-    */
-  def ivfAbsorbLog(spark: org.apache.spark.sql.SparkSession,
-                   indexPath: String, workDir: String,
-                   twoLevelAssign: Boolean = false,
-                   candidateGroups: Int = 2,
-                   twoLevelAutoNlist: Int = 512,
-                   idCol: String = "vec_id",
-                   vecCol: String = "embedding"): Seq[Long] =
-    absorbLogCore(spark, indexPath, workDir, "ivfAbsorbLog") {
-      (delta, absorbing) =>
-        graft.operators.Similarity.ivfAbsorbDelta(
-            graft.operators.Similarity.ivfLoad(spark, indexPath), delta,
-            twoLevelAssign, candidateGroups, twoLevelAutoNlist,
-            idCol, vecCol)
-          .save(absorbing)
-    }
-
-  /** [[ivfAbsorbLog]] on the production architecture: the log's rows
-    * assign to the persisted coarse quantizer, their residuals encode
-    * against the persisted codebook, and the integer codes append —
-    * then the same index-directory swap and log GC. The caller's
-    * re-rank corpus must include the absorbed rows afterwards (they
-    * are indexed now; the raw-vector side lives outside the index by
-    * the IvfPqIndex contract).
-    */
-  def ivfPqAbsorbLog(spark: org.apache.spark.sql.SparkSession,
-                     indexPath: String, workDir: String,
-                     m: Int = -1, twoLevelAssign: Boolean = false,
-                     twoLevelAutoNlist: Int = 512,
-                     idCol: String = "vec_id",
-                     vecCol: String = "embedding"): Seq[Long] =
-    absorbLogCore(spark, indexPath, workDir, "ivfPqAbsorbLog") {
-      (delta, absorbing) =>
-        graft.operators.Similarity.ivfPqAbsorbDelta(
-            graft.operators.Similarity.ivfPqLoad(spark, indexPath), delta,
-            m, twoLevelAssign, twoLevelAutoNlist, idCol, vecCol)
-          .save(absorbing)
-    }
-
-  /** The ONE absorb-and-GC core behind [[ivfAbsorbLog]] and
-    * [[ivfPqAbsorbLog]] — `absorbTo` reads the live index itself and
-    * writes the absorbed one to the staging path it is given; the
-    * marker discipline, the committed check, the swap, and the log GC
-    * live exactly once here (the foldRegistry shape).
+  /** Fold the persisted delta log into the index persisted at
+    * `indexPath` and GC the absorbed batch directories — `Similarity.
+    * absorb` run against the ON-DISK artifacts (`absorbLog[IvfIndex]`
+    * or `absorbLog[IvfPqIndex]`), turning the st11
+    * contract's prose ("absorb empties the log") into an operator, as
+    * dd21 did for the registry's "compact eventually". One bounded
+    * pass over the DELTA (the quantizer never retrains, the indexed
+    * corpus is never re-read), then a write-new / rename-swap of the
+    * index directory and removal of the absorbed `delta/batch=N`
+    * directories, so the log's remaining bytes are exactly the rows
+    * the index does NOT yet hold — the disjointness invariant
+    * `ivfSearchWithDelta` serves by. Returns the absorbed batch ids
+    * (empty when the log held nothing). For IVF-PQ the caller's
+    * re-rank corpus must include the absorbed rows afterwards.
     *
     * Crash anatomy, fail-loud at every window (never self-repair of a
     * half-swapped state):
@@ -1506,11 +1464,14 @@ object StreamingJobs {
     * must be committed (a replayed batch would re-append rows the
     * index now holds, breaking the disjointness contract).
     */
-  private def absorbLogCore(spark: org.apache.spark.sql.SparkSession,
-                            indexPath: String, workDir: String,
-                            what: String)
-                           (absorbTo: (DataFrame, String) => Unit)
+  def absorbLog[I](spark: org.apache.spark.sql.SparkSession,
+                   indexPath: String, workDir: String,
+                   twoLevelAssign: Boolean = false, candidateGroups: Int = 2,
+                   twoLevelAutoNlist: Int = 512, idCol: String = "vec_id",
+                   vecCol: String = "embedding")
+                  (implicit codec: graft.operators.Similarity.TrainedCodec[I])
     : Seq[Long] = {
+    val what = s"${codec.tag}AbsorbLog"
     val deltaDir = s"$workDir/delta"
     val fs = new Path(deltaDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -1554,7 +1515,9 @@ object StreamingJobs {
     if (delta.isEmpty) return Nil
     val absorbing = s"${indexPath}_absorbing"
     fs.delete(new Path(absorbing), true) // pre-swap leftover: garbage
-    absorbTo(delta, absorbing)
+    codec.save(graft.operators.Similarity.absorb(
+      codec.load(spark, indexPath), delta, twoLevelAssign, candidateGroups,
+      twoLevelAutoNlist, idCol, vecCol), absorbing)
     // the manifest rides INSIDE the new index directory BEFORE any
     // rename: it is what makes every later window's recovery decidable
     val mf = fs.create(new Path(s"$absorbing/_absorbed_batches"), true)
@@ -1591,7 +1554,7 @@ object StreamingJobs {
         s"$absRoot batches to delta/")
     // sibling artifacts the save functions don't know about (e.g. the
     // cellstats drift baseline, which must KEEP describing the BUILD's
-    // expectation — ivfDriftCheck prices drift against the build, not
+    // expectation — driftCheck prices drift against the build, not
     // against the absorbed state) carry over into the installed index
     // before the superseded directory is dropped
     fs.listStatus(preAbs).foreach { st =>

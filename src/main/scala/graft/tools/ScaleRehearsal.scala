@@ -509,13 +509,13 @@ object ScaleRehearsal {
         val q = e.filter(col("vec_id") < 10)
           .unionAll(planted.filter(col("vec_id") < 500000010L))
         val idx = Similarity.ivfBuild(e)
-        val stats = Similarity.ivfCellStats(idx).localCheckpoint()
-        val hotIdx = Similarity.ivfAbsorbDelta(idx, planted)
+        val stats = Similarity.cellStats(idx).localCheckpoint()
+        val hotIdx = Similarity.absorb(idx, planted)
         // the drift signal that SHOULD have blocked this absorb
-        val rep = Similarity.ivfDriftCheck(stats, idx.centroids, planted)
+        val rep = Similarity.driftCheck(stats, idx, planted)
         println(f"[scale] driftCheck $tag: shift=${rep.cellShift}%.4f " +
           f"drifted=${rep.drifted} (must be true)")
-        val share = Similarity.ivfCellStats(hotIdx)
+        val share = Similarity.cellStats(hotIdx)
           .agg(max(col("n")).cast("double") / sum(col("n"))).head().getDouble(0)
         println(f"[scale] hot-cell share $tag: $share%.4f (plant target ≥0.5)")
         // materialize both cell tables OUTSIDE the measured rows so the
@@ -545,7 +545,7 @@ object ScaleRehearsal {
     // flat (the dd20 contract must survive deletion). (2) cdcDeleteKeys
     // at two table decades — per-delete cost must track the TOUCHED
     // BUCKETS (~table/64), mirroring the cdc_1key_batch merge rows.
-    // (3) ivfDriftCheck across delta decades — one bounded delta pass,
+    // (3) driftCheck across delta decades — one bounded delta pass,
     // wall must track the DELTA, never the indexed corpus.
     if (args.lift(2).contains("r19life")) {
       val batch = docs.filter(col("doc_id") % 2 === 1).localCheckpoint()
@@ -590,11 +590,11 @@ object ScaleRehearsal {
       val e10p = ensureEmbReplica(10)
       val idx = Similarity.ivfBuild(
         embAt(s"$sfDir/embeddings.parquet").select("vec_id", "embedding"))
-      val stats = Similarity.ivfCellStats(idx).localCheckpoint()
+      val stats = Similarity.cellStats(idx).localCheckpoint()
       for ((tag, ep) <- Seq(("1x", s"$sfDir/embeddings.parquet"),
           ("10x", e10p))) {
         measure(s"drift_check delta=$tag") {
-          Similarity.ivfDriftCheck(stats, idx.centroids,
+          Similarity.driftCheck(stats, idx,
             embAt(ep).select("vec_id", "embedding")).nDelta
         }
       }
@@ -608,7 +608,7 @@ object ScaleRehearsal {
     // track the TOUCHED batch (one metadata-sized pass over the log to
     // find it, one dir rewritten), never the log; the all-batches
     // contrast row shows the other end of the honest O(touched) curve.
-    // (2) ivfAbsorbLog with a FIXED one-batch delta across INDEX
+    // (2) absorbLog with a FIXED one-batch delta across INDEX
     // decades — the assignment pass is delta-sized, but the install
     // rewrites the cells table (save compacts), so the wall tracks the
     // INDEX: the honest O(index) fold, amortized by the rebuild
@@ -661,7 +661,7 @@ object ScaleRehearsal {
             col("embedding"))
           .write.mode("overwrite").parquet(s"$wd/delta/batch=0")
         measure(s"absorb_log idx=$tag") {
-          graft.streaming.StreamingJobs.ivfAbsorbLog(spark, s"$wd/idx", wd)
+          graft.streaming.StreamingJobs.absorbLog[Similarity.IvfIndex](spark, s"$wd/idx", wd)
             .size.toLong
         }
       }
@@ -757,7 +757,7 @@ object ScaleRehearsal {
           .parquet(s"$wd/codes")
         val tomb = spark.range(1000L).select((col("id") * 97L % k).as("vec_id"))
         measure(f"bq_delete  k=$k%-9d") {
-          Similarity.bqDeleteIds(spark.read.parquet(s"$wd/codes"), tomb)
+          Similarity.delete(spark.read.parquet(s"$wd/codes"), tomb)
             .count()
         }
         val delta = spark.range(1000L).select((col("id") + k).as("vec_id"),
@@ -765,7 +765,7 @@ object ScaleRehearsal {
             ((pmod(xxhash64(col("id") + k, j), lit(1001)) - 500)
               .cast("double") / 250.0)).as("embedding"))
         measure(f"bq_absorb  k=$k%-9d") {
-          Similarity.bqAbsorbDelta(spark.read.parquet(s"$wd/codes"), delta)
+          Similarity.absorb(spark.read.parquet(s"$wd/codes"), delta)
             .count()
         }
         p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)

@@ -80,4 +80,31 @@ class CCPropSpec extends AnyFunSuite {
       assert(got == expected, s"trial $trial (m=$m)")
     }
   }
+
+  test("observe() metrics ride eager checkpoints: local and reliable truncation deliver them, equal to a recount") {
+    // the CC loops read each round's convergence count from the
+    // Observation of the round's eager checkpoint (Dedup's star and
+    // BSP rounds). obs.get blocks until the observed action delivers,
+    // so a broken mechanism would HANG there — the wait here is bounded
+    // and fails instead
+    import org.apache.spark.sql.functions._
+    import scala.concurrent.Await
+    import scala.concurrent.duration._
+    val df = (1 to 1000).toDF("x").filter(col("x") % 3 === 0)
+    val reliable =
+      java.nio.file.Files.createTempDirectory("graft-observe").toString
+    for (dir <- Seq(None, Some(reliable))) {
+      val cp = graft.operators.Checkpointing.truncator(spark,
+        enabled = true, dir)
+      val obs = org.apache.spark.sql.Observation()
+      val out = cp(df.observe(obs, count(lit(1)).as("n"),
+        count(when(col("x") > 900, lit(1))).as("big")))
+      val got = Await.result(obs.future, 2.minutes)
+      assert(got.getAs[Long]("n") == out.count() && out.count() == 333,
+        s"observed n ${got.getAs[Long]("n")} vs recount (dir=$dir)")
+      assert(got.getAs[Long]("big") == out.filter(col("x") > 900).count(),
+        s"observed big ${got.getAs[Long]("big")} vs recount (dir=$dir)")
+    }
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(reliable))
+  }
 }

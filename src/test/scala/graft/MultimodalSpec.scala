@@ -5,6 +5,19 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.multimodal.Multimodal
 
+/** The local filesystem under the test-only `faultydel` scheme, whose
+  * delete of a `*.__pre` directory reports failure and deletes nothing
+  * — the silent-failure window of a rename-swap's last step.
+  */
+class FailingPreDeleteFs extends org.apache.hadoop.fs.FilterFileSystem(
+    new org.apache.hadoop.fs.RawLocalFileSystem {
+      override def getUri: java.net.URI = java.net.URI.create("faultydel:///")
+    }) {
+  override def delete(f: org.apache.hadoop.fs.Path,
+                      recursive: Boolean): Boolean =
+    if (f.getName.endsWith(".__pre")) false else super.delete(f, recursive)
+}
+
 class MultimodalSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
@@ -334,5 +347,28 @@ class MultimodalSpec extends AnyFunSuite {
     spark.sql("DROP TABLE IF EXISTS graft_t_mm08")
     spark.sql("DROP TABLE IF EXISTS graft_t_mm08_rb")
     fs.delete(new org.apache.hadoop.fs.Path(work), true)
+  }
+
+  test("deleteFromHammingRegistry: a failed delete of the superseded registry raises, naming it, with the new registry live") {
+    import graft.operators.Dedup
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.faultydel.impl", classOf[FailingPreDeleteFs].getName)
+    conf.setBoolean("fs.faultydel.impl.disable.cache", true)
+    val work = java.nio.file.Files.createTempDirectory("graft-mm08f").toString
+    val reg = s"faultydel://$work/reg"
+    val hashes = Multimodal.dHashes(Multimodal.syntheticAssets(spark, 30))
+      .toDF().cache()
+    Dedup.writeHammingRegistry(hashes, "asset_id", "dhash",
+      "graft_t_mm08f", reg, maxDist = 3, numBuckets = 4)
+    val ex = intercept[RuntimeException] {
+      Dedup.deleteFromHammingRegistry(spark, "graft_t_mm08f", reg,
+        spark.range(0, 30, 2).select($"id".as("asset_id")), numBuckets = 4)
+    }
+    assert(ex.getMessage.contains(s"$work/reg.__pre"), ex.getMessage)
+    assert(spark.table("graft_t_mm08f").count() ==
+      hashes.filter($"asset_id" % 2 =!= 0).count() * 4,
+      "the swapped-in registry is not the live table")
+    spark.sql("DROP TABLE IF EXISTS graft_t_mm08f")
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(work))
   }
 }

@@ -391,7 +391,7 @@ class PipelineSpec extends AnyFunSuite {
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
         r.getLong(3))).toSeq
     val stale = Similarity.ivfBuild(indexed)
-    val absorbed = Similarity.ivfAbsorbDelta(stale, delta)
+    val absorbed = Similarity.absorb(stale, delta)
     val a = rows(Similarity.ivfSearch(q, absorbed, 5, nprobe = 16))
     val b = rows(Similarity.ivfSearchWithDelta(q, stale, delta, 5,
       nprobe = 16))
@@ -418,7 +418,7 @@ class PipelineSpec extends AnyFunSuite {
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
         r.getLong(3))).toSeq
     val stale = Similarity.ivfPqBuild(indexed)
-    val absorbed = Similarity.ivfPqAbsorbDelta(stale, delta)
+    val absorbed = Similarity.absorb(stale, delta)
     val a = rows(Similarity.ivfPqSearch(q, absorbed, e, 5, nprobe = 16,
       shortlist = 600))
     val b = rows(Similarity.ivfPqSearchWithDelta(q, stale, indexed, delta,
@@ -427,7 +427,7 @@ class PipelineSpec extends AnyFunSuite {
       "probe-all full-shortlist absorb-serve diverged from stale+delta")
     // m guard: absorbing with a mismatched m slices residuals that
     // cannot match the codebook width — must raise, never mis-encode
-    val bad = Similarity.ivfPqAbsorbDelta(stale, delta, m = 4)
+    val bad = Similarity.absorb(stale.copy(builtM = Some(4)), delta)
     val ex = intercept[Exception] {
       // force the guarded `sub` projection to evaluate (a bare count
       // would prune it away)
@@ -452,8 +452,8 @@ class PipelineSpec extends AnyFunSuite {
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
         r.getLong(3))).toSeq
     val full = Similarity.ivfBuild(e)
-    val deleted = Similarity.ivfDeleteIds(full, tomb)
-    val rebuilt = Similarity.ivfAbsorbDelta(
+    val deleted = Similarity.delete(full, tomb)
+    val rebuilt = Similarity.absorb(
       full.copy(cells = full.cells.filter(org.apache.spark.sql.functions
         .lit(false))), surv)
     val a = rows(Similarity.ivfSearch(q, deleted, 5, nprobe = 16))
@@ -472,8 +472,8 @@ class PipelineSpec extends AnyFunSuite {
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
         r.getLong(3))).toSeq
     val full = Similarity.ivfPqBuild(e)
-    val deleted = Similarity.ivfPqDeleteIds(full, tomb)
-    val rebuilt = Similarity.ivfPqAbsorbDelta(
+    val deleted = Similarity.delete(full, tomb)
+    val rebuilt = Similarity.absorb(
       full.copy(codes = full.codes.filter(org.apache.spark.sql.functions
         .lit(false))), surv)
     val a = rows(Similarity.ivfPqSearch(q, deleted, surv, 5, nprobe = 16,
@@ -501,11 +501,11 @@ class PipelineSpec extends AnyFunSuite {
       (i.toLong, unit(i % 3, 0.03 * (i % 5 - 2)))
     }.toDF("vec_id", "embedding")
     val idx = Similarity.ivfBuild(corpus, nlist = 3)
-    val stats = Similarity.ivfCellStats(idx).localCheckpoint()
+    val stats = Similarity.cellStats(idx).localCheckpoint()
     // persistence round-trip: the third artifact loads back identically
     val d = java.nio.file.Files.createTempDirectory("ivf-stats").toString
-    Similarity.ivfSaveStats(idx, d)
-    val loaded = Similarity.ivfLoadStats(spark, d)
+    Similarity.saveStats(idx, d)
+    val loaded = Similarity.loadStats(spark, d)
     assert(loaded.collect().map(r => (r.getLong(0), r.getLong(1),
         r.getDouble(2))).toSet ==
       stats.collect().map(r => (r.getLong(0), r.getLong(1),
@@ -514,7 +514,7 @@ class PipelineSpec extends AnyFunSuite {
     val delta = (0 until 30).map { i =>
       (1000L + i, unit(i % 3, 0.33))
     }.toDF("vec_id", "embedding")
-    val r = Similarity.ivfDriftCheck(loaded, idx.centroids, delta)
+    val r = Similarity.driftCheck(loaded, idx, delta)
     assert(r.drifted, s"off-axis delta did not trip: $r")
     assert(r.deltaMeanDist > 1.5 * r.expectedMeanDist,
       s"fit ratio did not trip: $r")
@@ -523,16 +523,16 @@ class PipelineSpec extends AnyFunSuite {
     val clean = (0 until 30).map { i =>
       (2000L + i, unit(i % 3, 0.03 * (i % 5 - 2)))
     }.toDF("vec_id", "embedding")
-    val rc = Similarity.ivfDriftCheck(loaded, idx.centroids, clean)
+    val rc = Similarity.driftCheck(loaded, idx, clean)
     assert(!rc.drifted, s"in-distribution delta tripped: $rc")
     // the PQ family reads the same plants through its L2-residual fit:
     // off-axis trips, in-distribution stays quiet
     val pq = Similarity.ivfPqBuild(corpus, nlist = 3, m = 4, codes = 8)
-    val pqStats = Similarity.ivfPqCellStats(pq, corpus).localCheckpoint()
-    val rp = Similarity.ivfPqDriftCheck(pqStats, pq.coarse, delta)
+    val pqStats = Similarity.cellStats(pq, Some(corpus)).localCheckpoint()
+    val rp = Similarity.driftCheck(pqStats, pq, delta)
     assert(rp.drifted && rp.deltaMeanDist > 1.5 * rp.expectedMeanDist,
       s"PQ fit did not trip on the off-axis delta: $rp")
-    assert(!Similarity.ivfPqDriftCheck(pqStats, pq.coarse, clean).drifted,
+    assert(!Similarity.driftCheck(pqStats, pq, clean).drifted,
       "PQ tripped on the in-distribution delta")
   }
 
@@ -553,8 +553,8 @@ class PipelineSpec extends AnyFunSuite {
           (pmod(xxhash64($"vec_id", j), lit(101)) - lit(50))
             .cast("double") / 2500.0)).cast("float")).as("embedding"))
     val idx = Similarity.ivfBuild(e)
-    val hotIdx = Similarity.ivfAbsorbDelta(idx, planted)
-    val share = Similarity.ivfCellStats(hotIdx)
+    val hotIdx = Similarity.absorb(idx, planted)
+    val share = Similarity.cellStats(hotIdx)
       .agg(max($"n").cast("double") / sum($"n")).head().getDouble(0)
     assert(share >= 0.5, f"plant failed — max cell share $share%.3f < 0.5")
     val q = e.filter($"vec_id" < 10)
@@ -575,8 +575,8 @@ class PipelineSpec extends AnyFunSuite {
     val total = exact.count()
     assert(hits * 100 >= total * 80,
       s"hot-cell recall $hits/$total below the 80% floor")
-    assert(Similarity.ivfDriftCheck(Similarity.ivfCellStats(idx),
-      idx.centroids, planted).drifted,
+    assert(Similarity.driftCheck(Similarity.cellStats(idx),
+      idx, planted).drifted,
       "the absorb that created the hot cell did not trip the drift signal")
   }
 
@@ -597,12 +597,12 @@ class PipelineSpec extends AnyFunSuite {
           (pmod(xxhash64($"vec_id", j), lit(101)) - lit(50))
             .cast("double") / 2500.0)).cast("float")).as("embedding"))
     val idx = Similarity.ivfBuild(e)
-    val stats = Similarity.ivfCellStats(idx).localCheckpoint()
-    val quiet = Similarity.ivfMaintain(idx, stats,
+    val stats = Similarity.cellStats(idx).localCheckpoint()
+    val quiet = Similarity.maintain(idx, stats,
       e.select(($"vec_id" + 60000000L).as("vec_id"), $"embedding"))
     assert(!quiet.rebuilt && !quiet.report.drifted,
       "an in-distribution clone delta should take the absorb arm")
-    val res = Similarity.ivfMaintain(idx, stats, planted)
+    val res = Similarity.maintain(idx, stats, planted)
     assert(res.rebuilt && res.report.drifted,
       "the hot-cell plant did not route to rebuild")
     // what the rebuild buys is RE-PRICED EXPECTATIONS, not a smaller
@@ -612,13 +612,13 @@ class PipelineSpec extends AnyFunSuite {
     // previous test), but the rebuilt stats now carry the planted mass
     // as the new normal — the absorbed-index stats (built pre-plant)
     // would keep tripping on every further batch of the same stream.
-    val freshStats = Similarity.ivfCellStats(res.index).localCheckpoint()
+    val freshStats = Similarity.cellStats(res.index).localCheckpoint()
     val planted2 = planted.select(($"vec_id" + 70000000L).as("vec_id"),
       $"embedding")
-    assert(!Similarity.ivfDriftCheck(freshStats, res.index.centroids,
+    assert(!Similarity.driftCheck(freshStats, res.index,
       planted2).drifted,
       "post-rebuild stats still flag the re-priced distribution as drift")
-    assert(Similarity.ivfDriftCheck(stats, idx.centroids,
+    assert(Similarity.driftCheck(stats, idx,
       planted2).drifted,
       "fixture drifted — the pre-rebuild stats no longer trip on the plant")
     // and the rebuilt index serves the grown corpus above the floor
@@ -632,6 +632,70 @@ class PipelineSpec extends AnyFunSuite {
     val total = exact.count()
     assert(hits * 100 >= total * 80,
       s"rebuilt-index recall $hits/$total below the 80% floor")
+  }
+
+  test("ivfPqMaintain quiet arm: the routed index equals ivfPqAbsorbDelta's, row for row") {
+    // an in-distribution clone of a corpus slice (fresh ids — absorb's
+    // disjointness contract) must take the absorb arm, and the index it
+    // returns must BE the absorbed index: same coarse cells, same
+    // codebook, same codes table, row for row
+    val e = Tables.load(spark, sf, "embeddings").select("vec_id", "embedding")
+    val idx = Similarity.ivfPqBuild(e)
+    val stats = Similarity.cellStats(idx, Some(e)).localCheckpoint()
+    val slice = e.filter($"vec_id" % 7 === 3)
+      .select(($"vec_id" + 200000L).as("vec_id"), $"embedding")
+    val quiet = Similarity.maintain(idx, stats, slice, Some(e))
+    assert(!quiet.rebuilt && !quiet.report.drifted,
+      s"an in-distribution clone delta should take the absorb arm: ${quiet.report}")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toString).sorted.toSeq
+    val absorbed = Similarity.absorb(idx, slice)
+    assert(rows(quiet.index.coarse) == rows(absorbed.coarse), "coarse diverged")
+    assert(rows(quiet.index.codebook) == rows(absorbed.codebook),
+      "codebook diverged")
+    assert(rows(quiet.index.codes) == rows(absorbed.codes),
+      "quiet-arm codes diverged from the absorbed codes")
+  }
+
+  test("ivfPqMaintain drifted arm: the routed index equals a fresh ivfPqBuild over corpus ∪ delta, row for row") {
+    // the same slice pushed off-distribution trips the L2-residual fit
+    // and the occupancy shift; the rebuild re-trains BOTH quantizers on
+    // the grown corpus, and build is value-deterministic, so the result
+    // must be identical to building over corpus ∪ delta directly
+    val e = Tables.load(spark, sf, "embeddings").select("vec_id", "embedding")
+    val idx = Similarity.ivfPqBuild(e)
+    val stats = Similarity.cellStats(idx, Some(e)).localCheckpoint()
+    val shifted = e.filter($"vec_id" % 7 === 3)
+      .select(($"vec_id" + 200000L).as("vec_id"),
+        transform($"embedding", x => x + lit(2.0)).as("embedding"))
+    val moved = Similarity.maintain(idx, stats, shifted, Some(e))
+    assert(moved.rebuilt && moved.report.drifted,
+      s"the off-distribution delta did not route to rebuild: ${moved.report}")
+    val grown = e
+      .select($"vec_id", transform($"embedding", x => x.cast("double"))
+        .as("embedding"))
+      .unionByName(shifted)
+    val fresh = Similarity.ivfPqBuild(grown)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toString).sorted.toSeq
+    assert(rows(moved.index.coarse) == rows(fresh.coarse), "coarse diverged")
+    assert(rows(moved.index.codebook) == rows(fresh.codebook),
+      "codebook diverged")
+    assert(rows(moved.index.codes) == rows(fresh.codes),
+      "rebuilt codes diverged from a fresh build over the grown corpus")
+  }
+
+  test("ivfPqSaveStats: the persisted cell stats load back identical to ivfPqCellStats") {
+    val e = Tables.load(spark, sf, "embeddings").select("vec_id", "embedding")
+    val idx = Similarity.ivfPqBuild(e)
+    val d = java.nio.file.Files.createTempDirectory("ivfpq-stats").toString
+    Similarity.saveStats(idx, d, Some(e))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toString).toSet
+    val loaded = rows(Similarity.loadStats(spark, d))
+    assert(loaded.nonEmpty, "no cell stats persisted")
+    assert(loaded == rows(Similarity.cellStats(idx, Some(e))),
+      "PQ cellstats round-trip diverged")
   }
 
   test("bqTopK: packed hamming = sign-mismatch count (multi-word), exact re-rank ranks by cosine") {
@@ -699,7 +763,7 @@ class PipelineSpec extends AnyFunSuite {
       df.collect().map(r => (r.getLong(0), r.getSeq[Long](1).toList)).toSet
     // stateless encoder ⇒ the deleted store IS binaryCodes(survivors),
     // not merely equivalent under search (sim31's hash-oracle premise)
-    assert(codeSet(Similarity.bqDeleteIds(Similarity.binaryCodes(e), tomb))
+    assert(codeSet(Similarity.delete(Similarity.binaryCodes(e), tomb))
       == codeSet(Similarity.binaryCodes(surv)),
       "deleted BQ store diverged from survivor re-encode")
     // a tombstone id that cannot cast to the store's id type must
@@ -707,7 +771,7 @@ class PipelineSpec extends AnyFunSuite {
     // every right-to-be-forgotten entry point)
     val bad = Seq("not-an-id").toDF("vec_id")
     val ex = intercept[Exception] {
-      Similarity.bqDeleteIds(Similarity.binaryCodes(e), bad).count()
+      Similarity.delete(Similarity.binaryCodes(e), bad).count()
     }
     assert(ex.getMessage.contains("bqDeleteIds"), ex.getMessage)
   }
@@ -723,7 +787,7 @@ class PipelineSpec extends AnyFunSuite {
     // in-plan union: absorbed store = building at rest over the grown
     // corpus (no trained state, so absorption is EXACT — the one
     // family where the absorb-vs-rebuild trade does not exist)
-    assert(codeSet(Similarity.bqAbsorbDelta(
+    assert(codeSet(Similarity.absorb(
       Similarity.binaryCodes(base), delta)) == grown,
       "absorbed BQ store diverged from grown-corpus re-encode")
     // at rest the same absorb is a delta-sized parquet APPEND of

@@ -130,12 +130,12 @@ class PlanSpec extends AnyFunSuite {
     import spark.implicits._
     val e = Tables.load(spark, sf, "embeddings")
     val tomb = Seq(1L, 2L, 3L).toDF("vec_id")
-    val deleted = graft.operators.Similarity.ivfDeleteIds(
+    val deleted = graft.operators.Similarity.delete(
       graft.operators.Similarity.ivfBuild(e), tomb)
     val p = deleted.cells.queryExecution.executedPlan.toString
     assert(p.contains("BroadcastHashJoin") && p.contains("LeftAnti"), p)
     assert(!p.contains("SortMergeJoin"), p)
-    val pqDeleted = graft.operators.Similarity.ivfPqDeleteIds(
+    val pqDeleted = graft.operators.Similarity.delete(
       graft.operators.Similarity.ivfPqBuild(e), tomb)
     val pp = pqDeleted.codes.queryExecution.executedPlan.toString
     assert(pp.contains("BroadcastHashJoin") && pp.contains("LeftAnti"), pp)

@@ -907,19 +907,20 @@ class StreamingSpec extends AnyFunSuite {
     val queries = corpus.filter("vec_id <= 3")
     // a sibling artifact (the drift baseline) must survive the swap —
     // it describes the BUILD's expectation and absorb never retrains
-    graft.operators.Similarity.ivfSaveStats(
+    graft.operators.Similarity.saveStats(
       graft.operators.Similarity.ivfLoad(spark, s"$work/idx"),
       s"$work/idx")
     val statsBefore = graft.operators.Similarity
-      .ivfLoadStats(spark, s"$work/idx").collect().toSet
+      .loadStats(spark, s"$work/idx").collect().toSet
     // the in-memory reference, COLLECTED before the swap mutates the
     // on-disk index its lazy plan reads from
     val ref = graft.operators.Similarity.ivfSearch(queries,
-        graft.operators.Similarity.ivfAbsorbDelta(
+        graft.operators.Similarity.absorb(
           graft.operators.Similarity.ivfLoad(spark, s"$work/idx"),
           StreamingJobs.deltaLog(spark, work)),
         3, nprobe = 4).collect().toSeq
-    val absorbed = StreamingJobs.ivfAbsorbLog(spark, s"$work/idx", work)
+    val absorbed = StreamingJobs.absorbLog[graft.operators.Similarity.IvfIndex](
+      spark, s"$work/idx", work)
     assert(absorbed == Seq(0L, 1L), absorbed.toString)
     val fs = new org.apache.hadoop.fs.Path(work)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -935,7 +936,7 @@ class StreamingSpec extends AnyFunSuite {
       new org.apache.hadoop.fs.Path(s"$work/idx/_absorbed_batches")))
     // the drift baseline carried over, byte-identical
     assert(graft.operators.Similarity
-      .ivfLoadStats(spark, s"$work/idx").collect().toSet == statsBefore)
+      .loadStats(spark, s"$work/idx").collect().toSet == statsBefore)
     // serve parity: the swapped on-disk index is the in-memory absorb,
     // row-for-row at full probe
     val onDisk = graft.operators.Similarity.ivfSearch(queries,
@@ -943,11 +944,13 @@ class StreamingSpec extends AnyFunSuite {
         3, nprobe = 4).collect().toSeq
     assert(onDisk == ref, s"on-disk=$onDisk vs in-memory=$ref")
     // a second absorb over the emptied log is a no-op
-    assert(StreamingJobs.ivfAbsorbLog(spark, s"$work/idx", work).isEmpty)
+    assert(StreamingJobs.absorbLog[graft.operators.Similarity.IvfIndex](
+      spark, s"$work/idx", work).isEmpty)
     // an interrupted-swap leftover refuses with the recovery named
     fs.mkdirs(new org.apache.hadoop.fs.Path(s"$work/idx_preabsorb"))
     val e1 = intercept[IllegalArgumentException] {
-      StreamingJobs.ivfAbsorbLog(spark, s"$work/idx", work)
+      StreamingJobs.absorbLog[graft.operators.Similarity.IvfIndex](
+        spark, s"$work/idx", work)
     }
     assert(e1.getMessage.contains("_absorbed_batches"), e1.getMessage)
     fs.delete(new org.apache.hadoop.fs.Path(s"$work/idx_preabsorb"), true)
@@ -964,7 +967,8 @@ class StreamingSpec extends AnyFunSuite {
       .toDF("vec_id", "embedding")
       .write.mode("overwrite").parquet(s"$work/delta/batch=9")
     val e3 = intercept[IllegalArgumentException] {
-      StreamingJobs.ivfAbsorbLog(spark, s"$work/idx", work)
+      StreamingJobs.absorbLog[graft.operators.Similarity.IvfIndex](
+        spark, s"$work/idx", work)
     }
     assert(e3.getMessage.contains("not committed"), e3.getMessage)
   }
@@ -993,11 +997,12 @@ class StreamingSpec extends AnyFunSuite {
     // in-memory reference, collected before the swap (lazy plans read
     // the on-disk index)
     val ref = graft.operators.Similarity.ivfPqSearch(queries,
-        graft.operators.Similarity.ivfPqAbsorbDelta(
+        graft.operators.Similarity.absorb(
           graft.operators.Similarity.ivfPqLoad(spark, s"$work/idx"),
           StreamingJobs.deltaLog(spark, work)),
         grown, 3, nprobe = 4).collect().toSeq
-    val absorbed = StreamingJobs.ivfPqAbsorbLog(spark, s"$work/idx", work)
+    val absorbed = StreamingJobs.absorbLog[graft.operators.Similarity.IvfPqIndex](
+      spark, s"$work/idx", work)
     assert(absorbed == Seq(0L), absorbed.toString)
     // zero data rows behind the readable placeholder (the st15 shape)
     assert(StreamingJobs.deltaLog(spark, work).isEmpty)
@@ -1005,7 +1010,8 @@ class StreamingSpec extends AnyFunSuite {
         graft.operators.Similarity.ivfPqLoad(spark, s"$work/idx"),
         grown, 3, nprobe = 4).collect().toSeq
     assert(onDisk == ref, s"on-disk=$onDisk vs in-memory=$ref")
-    assert(StreamingJobs.ivfPqAbsorbLog(spark, s"$work/idx", work).isEmpty)
+    assert(StreamingJobs.absorbLog[graft.operators.Similarity.IvfPqIndex](
+      spark, s"$work/idx", work).isEmpty)
   }
 
   test("near-dup screen: catalog loss (app restart) re-registers the surviving registry — never wipes it") {
