@@ -3,7 +3,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Driver-run benchmark: times every SparkEntry query at the configured
-  * scale factor, one JSON line on stdout (BASELINE.md bench gate).
+  * scale factor and prints the full JSON line (also written to
+  * bench_out.json), then a compact totals-only JSON line of at most 300
+  * bytes as the last stdout line (BASELINE.md bench gate).
   * Queries run in sorted name order after an untimed warm-up query so
   * JVM/codegen/first-scan costs don't land on an arbitrary query.
   */
@@ -132,11 +134,18 @@ object Bench {
     val failed = results.collect { case (k, _, Some(e)) => s""""$k":"$e"""" }
       .mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
-    val json = s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$qs,"failed":$failed,"calib_ms":[${r3(calibPre)},${r3(calibPost)}],"calib_par_ms":[${r3(calibParPre)},${r3(calibParPost)}],"sf":"$sfDir"}"""
+    val calib = s""""calib_ms":[${r3(calibPre)},${r3(calibPost)}],"calib_par_ms":[${r3(calibParPre)},${r3(calibParPost)}]"""
+    val json = s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$qs,"failed":$failed,$calib,"sf":"$sfDir"}"""
     java.nio.file.Files.write(java.nio.file.Paths.get("bench_out.json"),
       (json + "\n").getBytes("UTF-8"))
     println(json)
     spark.stop()
     println(json)
+    // the totals alone, as the process's last stdout line: a reader
+    // that keeps only the last 2000 bytes of output gets it whole. sf is
+    // the directory's name, so a long path cannot push the line past its
+    // 300-byte budget.
+    val sf = java.nio.file.Paths.get(sfDir).getFileName
+    println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","failed":${results.count(_._3.nonEmpty)},$calib,"sf":"$sf"}""")
   }
 }

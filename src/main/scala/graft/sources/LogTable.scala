@@ -17,6 +17,13 @@ import graft.operators.LogEtl
   * directories are ever listed/scanned — no full-table listing, which at
   * 100 TB (thousands of date dirs × buckets) is the difference between
   * a metadata lookup and an hour of S3 LIST calls.
+  *
+  * Reads plan from the schema the table declares (`outputSchema`, the
+  * column list `ddl` emits), as Athena plans from its DDL: planning
+  * opens no file footer and launches no Spark job, and a day directory
+  * that exists but holds no data files reads as zero rows, like an empty
+  * Athena partition. `LogEtl.compact` writes exactly this schema
+  * (pinned by LogEtlSpec).
   */
 object LogTable {
 
@@ -38,7 +45,9 @@ object LogTable {
   }
 
   /** Read a date range of the compacted table: scans exactly the pruned
-    * day directories, nothing else.
+    * day directories, nothing else, under the declared `outputSchema`.
+    * Raises IllegalArgumentException when no day directory of the range
+    * exists.
     */
   def read(spark: SparkSession, destRoot: String, bucketName: String,
            from: LocalDate, to: LocalDate,
@@ -46,7 +55,7 @@ object LogTable {
     val paths = dayPaths(spark, destRoot, bucketName, from, to, hiveLayout)
     require(paths.nonEmpty,
       s"no compacted data for $bucketName in [$from, $to] under $destRoot")
-    spark.read.parquet(paths: _*)
+    spark.read.schema(outputSchema).parquet(paths: _*)
   }
 
   private def hiveType(dt: DataType): String = dt match {

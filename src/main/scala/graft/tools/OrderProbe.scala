@@ -15,8 +15,9 @@ object OrderProbe {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val b = args.lift(1).getOrElse("mm06_video_neardup")
     val pre = args.lift(2).map(_.split(",").toSeq).getOrElse(Nil)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val spark = SparkSession.builder().master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.extensions", "graft.GraftExtensions")
       .config("spark.ui.enabled", "false")

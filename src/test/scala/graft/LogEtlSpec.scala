@@ -1,12 +1,13 @@
 package graft
 
 import java.nio.file.Files
+import java.time.LocalDate
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.LogEtl
-import graft.sources.S3AccessLog
+import graft.sources.{LogTable, S3AccessLog}
 
 class LogEtlSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -103,6 +104,56 @@ class LogEtlSpec extends AnyFunSuite {
     LogEtl.compact(spark, in, out)
     LogEtl.compact(spark, in, out)
     assert(spark.read.parquet(out).count() == 201)
+  }
+
+  test("compact writes exactly LogTable.outputSchema into every footer, fused and unfused") {
+    // LogTable.read plans from outputSchema without opening a footer, so
+    // a parser whose output drifts from it must fail here rather than
+    // read back as a silently null-filled column
+    val conf = spark.sparkContext.hadoopConfiguration
+    val converter =
+      new org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter()
+    for (fused <- Seq(true, false)) {
+      val in = tmpDir(); val out = tmpDir()
+      Files.write(java.nio.file.Paths.get(s"$in/part0.txt"),
+        lines.mkString("\n").getBytes)
+      LogEtl.compact(spark, in, out, numOutputFiles = 2, fused = fused)
+      val parquets = new java.io.File(out).listFiles
+        .filter(_.getName.endsWith(".parquet"))
+      assert(parquets.length == 2)
+      parquets.foreach { f =>
+        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            new org.apache.hadoop.fs.Path(f.toURI), conf))
+        val footer = try converter.convert(reader.getFileMetaData.getSchema)
+                     finally reader.close()
+        assert(footer == LogTable.outputSchema,
+          s"fused=$fused ${f.getName}")
+      }
+    }
+  }
+
+  test("LogTable.read: an existing day without data files reads as zero rows") {
+    val in = tmpDir(); val root = tmpDir()
+    val (d1, d2) = (LocalDate.of(2024, 7, 1), LocalDate.of(2024, 7, 2))
+    Files.write(java.nio.file.Paths.get(s"$in/part0.txt"),
+      lines.mkString("\n").getBytes)
+    LogEtl.compact(spark, in, LogEtl.destPath(root, "b1", d1, hiveLayout = false))
+    // day 2 exists but holds no data: one empty directory, one with only
+    // a commit marker (the listing skips `_`-prefixed files)
+    val day2 = LogEtl.destPath(root, "b1", d2, hiveLayout = false)
+    Files.createDirectories(java.nio.file.Paths.get(day2))
+    val day3 = LogEtl.destPath(root, "b1", d2.plusDays(1), hiveLayout = false)
+    Files.createDirectories(java.nio.file.Paths.get(day3))
+    Files.write(java.nio.file.Paths.get(s"$day3/_SUCCESS"), Array.emptyByteArray)
+    val empty = LogTable.read(spark, root, "b1", d2, d2.plusDays(1))
+    assert(empty.schema == LogTable.outputSchema)
+    assert(empty.count() == 0)
+    assert(LogTable.read(spark, root, "b1", d1, d2.plusDays(1)).count() == 201)
+    // a range with no day directory at all still refuses loudly
+    intercept[IllegalArgumentException] {
+      LogTable.read(spark, root, "b1", d1.minusDays(9), d1.minusDays(8))
+    }
   }
 
   test("destPath: raw vs hive layout (s3_server_access_logs.py:445-454)") {

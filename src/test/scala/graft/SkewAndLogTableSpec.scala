@@ -3,6 +3,9 @@ package graft
 import java.nio.file.Files
 import java.time.LocalDate
 
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -85,6 +88,96 @@ class SkewAndLogTableSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] {
       LogTable.read(spark, outRoot, "b1",
         LocalDate.of(2025, 1, 1), LocalDate.of(2025, 1, 2))
+    }
+  }
+
+  /** Three compacted days of bucket b1 in the given layout; returns the
+    * table root.
+    */
+  def compactedDays(hiveLayout: Boolean): String = {
+    val inRoot = Files.createTempDirectory("graft-lt-in").toString
+    val outRoot = Files.createTempDirectory("graft-lt-out").toString
+    for (day <- Seq(1, 2, 3)) {
+      val dir = s"$inRoot/b1/2024/07/0$day"
+      Files.createDirectories(java.nio.file.Paths.get(dir))
+      val lines = (0 until 60).map { i =>
+        S3AccessLog.renderLine(RenderFixtures.baseFields
+          .updated("time", f"[0$day/Jul/2024:${i % 24}%02d:${i % 60}%02d:00 +0000]")
+          .updated("reqid", s"D$day-R$i")
+          .updated("bytes", (i * 37L + day).toString))
+      } :+ "not an access log line"
+      Files.write(java.nio.file.Paths.get(s"$dir/f.log"),
+        lines.mkString("\n").getBytes)
+    }
+    LogEtl.runBackfill(spark, inRoot, outRoot, Seq("b1"),
+      LocalDate.of(2024, 7, 1), LocalDate.of(2024, 7, 3), numOutputFiles = 2,
+      hiveLayout = hiveLayout)
+    outRoot
+  }
+
+  /** The read benchmark's four query shapes over one table frame: a
+    * one-hour window aggregate, per-hour and per-day rollups, and a
+    * request_id lookup.
+    */
+  def queryShapes(t: DataFrame): Seq[(String, DataFrame)] = {
+    val rt = $"request_time"
+    val aggs = Seq(count(lit(1)),
+      sum(when($"http_status" >= 400, 1L).otherwise(0L)), sum($"bytes_sent"))
+    val start = java.time.Instant.parse("2024-07-02T05:00:00Z").getEpochSecond
+    Seq(
+      "window" -> t.filter(rt >= timestamp_seconds(lit(start)) &&
+          rt < timestamp_seconds(lit(start + 3600)))
+        .agg(aggs.head, aggs.tail: _*),
+      "per-hour" -> t.filter(rt.isNotNull).groupBy(hour(rt).as("h"))
+        .agg(aggs.head, aggs.tail: _*).orderBy("h"),
+      "per-day" -> t.filter(rt.isNotNull)
+        .groupBy(date_format(rt, "yyyy-MM-dd").as("d"))
+        .agg(aggs.head, aggs.tail: _*).orderBy("d"),
+      "lookup" -> t.filter($"request_id" === "D2-R17")
+        .select(unix_timestamp(rt), $"http_status", $"bytes_sent"))
+  }
+
+  test("LogTable.read returns the rows of a plain parquet read, raw and Hive layouts") {
+    val (from, to) = (LocalDate.of(2024, 7, 1), LocalDate.of(2024, 7, 3))
+    for (hive <- Seq(false, true)) {
+      val root = compactedDays(hive)
+      val table = LogTable.read(spark, root, "b1", from, to, hiveLayout = hive)
+      val plain = spark.read.parquet(
+        LogTable.dayPaths(spark, root, "b1", from, to, hive): _*)
+      assert(table.count() == 183, s"hive=$hive")
+      queryShapes(table).zip(queryShapes(plain)).foreach {
+        case ((name, got), (_, want)) =>
+          val expected = want.collect().toSeq
+          assert(expected.nonEmpty, s"$name hive=$hive must select rows")
+          assert(got.collect().toSeq == expected, s"$name hive=$hive")
+      }
+      assert(queryShapes(table).head._2.head().getLong(0) == 3L, s"hive=$hive")
+    }
+  }
+
+  test("LogTable.read plans without launching a Spark job") {
+    val (from, to) = (LocalDate.of(2024, 7, 1), LocalDate.of(2024, 7, 3))
+    val sc = spark.sparkContext
+    for (hive <- Seq(false, true)) {
+      val root = compactedDays(hive)
+      val jobs = new java.util.concurrent.atomic.AtomicInteger()
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          jobs.incrementAndGet()
+      }
+      ListenerBusDrain.drain(sc, 60000)
+      sc.addSparkListener(listener)
+      try {
+        val queries = queryShapes(
+          LogTable.read(spark, root, "b1", from, to, hiveLayout = hive))
+        queries.foreach(_._2.queryExecution.executedPlan)
+        ListenerBusDrain.drain(sc, 60000)
+        assert(jobs.get == 0, s"hive=$hive: planning launched ${jobs.get} job(s)")
+        // the listener does see jobs: executing launches them
+        queries.head._2.collect()
+        ListenerBusDrain.drain(sc, 60000)
+        assert(jobs.get > 0, s"hive=$hive")
+      } finally sc.removeSparkListener(listener)
     }
   }
 
