@@ -1212,13 +1212,13 @@ object Dedup {
     * layout-establishing exchange precisely because the layout
     * already holds: the whole delete is scan → broadcast-anti →
     * write, 0.0 MB of shuffle at every registry decade (SCALE.md
-    * r20). The swap is crash-safe the house way: survivors land at
-    * `<path>.__next`, the live tree steps aside to `<path>.__pre`,
-    * next renames in, pre deletes last — an interrupted run leaves
-    * `__pre` (the previous registry, intact) and the next attempt
-    * refuses with the restore path named rather than guessing; a
-    * delete of `__pre` that fails raises, naming it, with the new
-    * registry already live.
+    * r20). The swap is crash-safe the house way ([[Commit.swap]]):
+    * survivors land at `<path>.__next`, the live tree steps aside to
+    * `<path>.__pre`, next renames in, pre deletes last — an
+    * interrupted run leaves `__pre` (the previous registry, intact)
+    * and the next attempt refuses with the restore path named rather
+    * than guessing; a delete of `__pre` that fails raises, naming it,
+    * with the new registry already live.
     *
     * The deleted registry is value-IDENTICAL to one rebuilt from the
     * survivors (the sim27 contract): banding is a pure per-row
@@ -1233,8 +1233,8 @@ object Dedup {
                                 tombstones: DataFrame,
                                 numBuckets: Int = 32): Unit = {
     val reg = spark.table(table)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val live = new org.apache.hadoop.fs.Path(path)
+    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val pre = new org.apache.hadoop.fs.Path(s"$path.__pre")
     require(!fs.exists(pre),
       s"interrupted registry deletion: $pre still holds the previous " +
@@ -1242,24 +1242,14 @@ object Dedup {
         "completed) before deleting again")
     val survivors = Similarity.dropTombstoned(reg, reg.columns.head,
       tombstones, "deleteFromHammingRegistry")
-    val next = s"$path.__next"
-    Bucketing.rewriteBucketedAt(survivors, s"${table}_next",
-      Seq("band", "bv"), numBuckets, next)
-    val schemaDdl = survivors.schema.toDDL
-    spark.sql(s"DROP TABLE IF EXISTS ${table}_next")
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    val live = new org.apache.hadoop.fs.Path(path)
-    require(fs.rename(live, pre), s"rename $path -> $pre failed")
-    require(fs.rename(new org.apache.hadoop.fs.Path(next), live),
-      s"rename $next -> $path failed ($pre holds the previous registry)")
-    Bucketing.registerBucketedAt(spark, table, schemaDdl,
-      Seq("band", "bv"), numBuckets, path)
-    // a failed delete must raise: a silent one leaves __pre behind and
-    // the guard above then refuses every later deletion
-    if (!fs.delete(pre, true))
-      sys.error(s"deleteFromHammingRegistry: swap COMPLETED but the " +
-        s"superseded registry at $pre could not be deleted — delete it " +
-        "manually to unblock later deletions (the live registry is intact)")
+    Commit.swap(fs, live, pre, new org.apache.hadoop.fs.Path(s"$path.__next")) {
+      next =>
+        Bucketing.rewriteBucketedAt(survivors, s"${table}_next",
+          Seq("band", "bv"), numBuckets, next.toString)
+        spark.sql(s"DROP TABLE IF EXISTS ${table}_next")
+        spark.sql(s"DROP TABLE IF EXISTS $table")
+    }(Bucketing.registerBucketedAt(spark, table, survivors.schema.toDDL,
+      Seq("band", "bv"), numBuckets, path))
   }
 
   /** Typo-pair detection over a token vocabulary (the fuzzy-key-matching

@@ -3,8 +3,8 @@ package graft.operators
 import java.time.LocalDate
 import java.time.format.DateTimeFormatter
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 import graft.sources.S3AccessLog
 
@@ -13,7 +13,7 @@ import graft.sources.S3AccessLog
   *
   *   text scan → parse → project(27 cols, request_time at position 3) →
   *   repartition(numOutputFiles) → sortWithinPartitions(request_time) →
-  *   snappy parquet, overwrite.
+  *   snappy parquet, swapped in over the day.
   *
   * Differences by design (SURVEY.md §3/§4): the scan is Spark's native
   * text file source — distributed listing, split planning by
@@ -33,8 +33,13 @@ import graft.sources.S3AccessLog
   *    (no global range exchange) — it exists to give Parquet row-group
   *    min/max stats selectivity on time (s3_server_access_logs.py:442,
   *    457-458), not to order output.
-  *  - `mode(overwrite)` per (bucket, date) destination keeps daily re-runs
-  *    and backfills idempotent (s3_server_access_logs.py:361-368,459).
+  *  - each (bucket, date) destination is REPLACED whole, which keeps daily
+  *    re-runs and backfills idempotent (s3_server_access_logs.py:361-368,
+  *    459) — but through [[Commit.swap]], not the reference's
+  *    `mode(overwrite)`: the day is written to `<day>.__next` and renamed
+  *    over the live day, so a failed or interrupted run never leaves
+  *    readers an empty day (Spark's overwrite deletes the live day before
+  *    its write stage runs).
   */
 object LogEtl {
 
@@ -46,7 +51,7 @@ object LogEtl {
     * The reference README claims "VPC, S3, ALB" converters but ships
     * only S3 (README.md:11, converters/ has one subdir) — this registry
     * is the actual family abstraction: everything downstream of parse
-    * (repartition → sort → snappy parquet → overwrite) is shared.
+    * (repartition → sort → snappy parquet → swap) is shared.
     */
   final case class Format(parse: (DataFrame, Boolean) => DataFrame,
                           sortColumn: String)
@@ -90,7 +95,7 @@ object LogEtl {
   def compact(spark: SparkSession, inputPath: String, dest: String,
               numOutputFiles: Int = 10, fused: Boolean = true,
               format: String = "s3"): Unit = {
-    val hadoopPath = new org.apache.hadoop.fs.Path(inputPath)
+    val hadoopPath = new Path(inputPath)
     val fs = hadoopPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(hadoopPath)) {
       System.err.println(s"[log-etl] no input at $inputPath — skipping")
@@ -106,43 +111,27 @@ object LogEtl {
   }
 
   /** O12–O14: bounded file count, partition-local time sort, snappy
-    * parquet, idempotent overwrite (s3_server_access_logs.py:457-463).
+    * parquet, idempotent replace (s3_server_access_logs.py:457-463). The
+    * new day lands at `<dest>.__next` and [[Commit.swap]]s in; the
+    * previous day sits at `<dest>.__pre` only while the renames run. A
+    * crash between them leaves that `__pre`, and the next write over
+    * `dest` refuses, naming it.
     */
   def write(parsed: DataFrame, dest: String, numOutputFiles: Int = 10,
-            sortColumn: String = "request_time"): Unit =
-    parsed
-      .repartition(numOutputFiles)
-      .sortWithinPartitions(sortColumn)
-      .write.mode("overwrite")
-      .option("compression", "snappy")
-      .parquet(dest)
-
-  /** Spark-native evolution of the reference's Hive layout option
-    * (s3_server_access_logs.py:445-454 only TEMPLATES `year=/month=/day=`
-    * into the destination path; `partitionBy()` is called with an empty
-    * list, s3_server_access_logs.py:443,459-461): here the date parts are
-    * real partition COLUMNS, so any engine reading the table gets
-    * partition pruning from predicates instead of path construction —
-    * one table root, no per-day path fan-out, dynamic overwrite keeps
-    * re-runs idempotent per partition.
-    */
-  def writeHivePartitioned(parsed: DataFrame, destRoot: String,
-                           filesPerDay: Int = 10): Unit =
-    parsed
-      .withColumn("year", org.apache.spark.sql.functions.year(col("request_time")))
-      .withColumn("month", org.apache.spark.sql.functions.month(col("request_time")))
-      .withColumn("day", org.apache.spark.sql.functions.dayofmonth(col("request_time")))
-      // salt within each day so a day spreads over up to filesPerDay
-      // files/tasks (hashing the date columns alone would funnel each
-      // day into a single writer)
-      .repartition(filesPerDay, col("year"), col("month"), col("day"),
-        pmod(xxhash64(col("request_id")), lit(filesPerDay)))
-      .sortWithinPartitions("request_time")
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .option("compression", "snappy")
-      .partitionBy("year", "month", "day")
-      .parquet(destRoot)
+            sortColumn: String = "request_time"): Unit = {
+    val live = new Path(dest)
+    val fs = live.getFileSystem(
+      parsed.sparkSession.sparkContext.hadoopConfiguration)
+    Commit.swap(fs, live, new Path(s"$dest.__pre"),
+        new Path(s"$dest.__next")) { next =>
+      parsed
+        .repartition(numOutputFiles)
+        .sortWithinPartitions(sortColumn)
+        .write
+        .option("compression", "snappy")
+        .parquet(next.toString)
+    }(())
+  }
 
   /** O15: run-date loop / backfill driver (s3_server_access_logs.py:353-376):
     * iterates FORWARD one compact per date from `startDate` up to and

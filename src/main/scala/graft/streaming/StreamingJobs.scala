@@ -507,23 +507,15 @@ object StreamingJobs {
     val newMap = prevMap ++ touched.map(b => b -> s"$genDir/_bucket=$b")
     val fs = cdcFs(s, workDir)
     fs.mkdirs(new Path(s"$workDir/_commits"))
-    val tmp = new Path(s"$workDir/_commits/.c$batchId.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(cdcCommitBody(buckets, Some(StructType(unionFields)),
-      newMap))
-    finally out.close()
     val commit = new Path(s"$workDir/_commits/c$batchId")
-    if (!fs.rename(tmp, commit)) {
-      // the rename can only lose to a commit that already exists for
-      // this batchId — under the single-writer contract that is a
-      // duplicate attempt of THIS batch (zombie task / speculative
-      // retry), whose commit is authoritative. Adopt it and drop our
-      // orphaned temp file instead of leaving it behind.
+    // the rename can only lose to a commit that already exists for this
+    // batchId — under the single-writer contract that is a duplicate
+    // attempt of THIS batch (zombie task / speculative retry), whose
+    // commit is authoritative: adopt it
+    if (!graft.operators.Commit.file(fs, commit,
+        cdcCommitBody(buckets, Some(StructType(unionFields)), newMap)))
       require(fs.exists(commit),
         s"could not commit CDC batch $batchId at $commit")
-      fs.delete(tmp, false)
-      ()
-    }
     true
   }
 
@@ -640,11 +632,8 @@ object StreamingJobs {
     val newMap = (map -- touched) ++ rewritten
     val commit = new Path(
       s"$workDir/_commits/${cdcCommitName((latest._1, latest._2 + 1))}")
-    val tmp = new Path(s"$workDir/_commits/.${commit.getName}.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(cdcCommitBody(buckets, schema, newMap))
-    finally out.close()
-    if (!fs.rename(tmp, commit))
+    if (!graft.operators.Commit.file(fs, commit,
+        cdcCommitBody(buckets, schema, newMap)))
       sys.error(s"$what: could not commit $commit — the table " +
         "is unchanged (the previous commit remains authoritative)")
     cdcGc(fs, workDir)
@@ -749,20 +738,18 @@ object StreamingJobs {
       .digest(workDir.getBytes("UTF-8"))
       .take(8).map(b => f"$b%02x").mkString
 
-  /** Commit a small key=value file via write-tmp + rename (atomic on
-    * HDFS, close enough locally): the registry's build params must
-    * survive APPLICATION restarts — catalog entries die with an
-    * in-memory-catalog app, the filesystem doesn't.
+  /** Commit a small key=value file ([[graft.operators.Commit.file]]):
+    * the registry's build params must survive APPLICATION restarts —
+    * catalog entries die with an in-memory-catalog app, the filesystem
+    * doesn't. Any previous file is deleted first (a rename onto an
+    * existing file loses on HDFS).
     */
   private def writeParamsFile(fs: FileSystem, p: Path,
                               params: Seq[(String, String)]): Unit = {
-    val tmp = new Path(p.getParent, p.getName + ".tmp")
-    val out = fs.create(tmp, true)
-    try out.write(params.map { case (k, v) => s"$k=$v" }.mkString("\n")
-      .getBytes("UTF-8"))
-    finally out.close()
     fs.delete(p, false)
-    if (!fs.rename(tmp, p)) sys.error(s"could not commit params file $p")
+    if (!graft.operators.Commit.file(fs, p, params.map { case (k, v) =>
+        s"$k=$v" }.mkString("\n").getBytes("UTF-8")))
+      sys.error(s"could not commit params file $p")
   }
 
   private def readParamsFile(fs: FileSystem, p: Path): Map[String, String] = {
@@ -1131,7 +1118,8 @@ object StreamingJobs {
     * to the rows on the way — identity for plain compaction, a
     * retention filter, or a tombstone anti-join. The at-rest/committed
     * CONTRACT, the commit-log verification, the precompact fail-loud
-    * recovery, and the write-new/rename-swap live exactly once here.
+    * recovery, and the write-new/rename-swap
+    * ([[graft.operators.Commit.swap]]) live exactly once here.
     */
   private def foldRegistry(spark: org.apache.spark.sql.SparkSession,
                            workDir: String, what: String,
@@ -1147,13 +1135,12 @@ object StreamingJobs {
     val trashDir = s"$workDir/registry_precompact"
     // leftovers of an earlier interrupted compaction are recoverable
     // state, not garbage — refuse to proceed over them (screenBatch
-    // refuses too); a fresh attempt may clear a compacting dir that
-    // never swapped, but a precompact dir IS the previous registry
+    // refuses too); a precompact dir IS the previous registry (the
+    // swap clears a compacting dir that never swapped)
     require(!fs.exists(new Path(trashDir)),
       s"interrupted compaction: $trashDir still holds the previous " +
         "registry — restore it to registry/ (or delete it if the swap " +
         "completed) before compacting again")
-    fs.delete(new Path(compactDir), true)
     // id column name/type come from the data itself (first column of
     // the banded layout) — the one place they are always right. Read
     // from ONE leaf file: a full spark.read.parquet(regDir) listing
@@ -1184,36 +1171,26 @@ object StreamingJobs {
           "compacting")
     val cTable = regTable + "_c"
     spark.sql(s"DROP TABLE IF EXISTS $cTable")
-    // transform sees the table WITH its partition key (retention reads
-    // it as the legacy ingest fallback); the fold then re-keys every
-    // surviving row to the highest folded batch id
-    transform(spark.table(regTable), idColName).drop("batch")
-      .withColumn("batch", lit(maxBatch))
-      .repartition(regBuckets, col("band"), col("bucket"))
-      .write.mode("overwrite")
-      .option("path", compactDir)
-      .partitionBy("batch")
-      .bucketBy(regBuckets, "band", "bucket")
-      .sortBy("band", "bucket")
-      .format("parquet")
-      .saveAsTable(cTable)
-    // swap: old → trash, new → live, drop stale catalog entries, then
-    // re-register the live location and clear the trash
-    spark.sql(s"DROP TABLE IF EXISTS $cTable")
-    spark.sql(s"DROP TABLE IF EXISTS $regTable")
-    if (!fs.rename(new Path(regDir), new Path(trashDir)))
-      sys.error(s"$what: could not move $regDir aside")
-    if (!fs.rename(new Path(compactDir), new Path(regDir)))
-      sys.error(s"$what: could not install $compactDir — " +
-        s"the previous registry is intact at $trashDir; restore it")
-    registerRegistry(spark, regTable, regDir, idColName, idType, regBuckets)
-    // a failed trash delete must raise: silence would leave the
-    // completed compaction permanently locked out as "interrupted"
-    // (both the screen and a re-compaction refuse over the marker)
-    if (!fs.delete(new Path(trashDir), true))
-      sys.error(s"$what: swap COMPLETED but the superseded " +
-        s"registry at $trashDir could not be deleted — delete it " +
-        "manually to unblock the screen (the live registry is intact)")
+    graft.operators.Commit.swap(fs, new Path(regDir), new Path(trashDir),
+        new Path(compactDir)) { next =>
+      // transform sees the table WITH its partition key (retention
+      // reads it as the legacy ingest fallback); the fold then re-keys
+      // every surviving row to the highest folded batch id
+      transform(spark.table(regTable), idColName).drop("batch")
+        .withColumn("batch", lit(maxBatch))
+        .repartition(regBuckets, col("band"), col("bucket"))
+        .write.mode("overwrite")
+        .option("path", next.toString)
+        .partitionBy("batch")
+        .bucketBy(regBuckets, "band", "bucket")
+        .sortBy("band", "bucket")
+        .format("parquet")
+        .saveAsTable(cTable)
+      // catalog entries over the moving locations go before the renames
+      spark.sql(s"DROP TABLE IF EXISTS $cTable")
+      spark.sql(s"DROP TABLE IF EXISTS $regTable")
+    }(registerRegistry(spark, regTable, regDir, idColName, idType,
+      regBuckets))
   }
 
   /** The id field (name + type) of a banded registry, read from ONE
@@ -1385,23 +1362,12 @@ object StreamingJobs {
     val preRoot = new Path(s"$workDir/delta_predelete")
     touched.foreach { b =>
       val live = new Path(s"$deltaDir/batch=$b")
-      val next = new Path(s"$workDir/delta_deleting/batch=$b")
-      fs.delete(next, true) // pre-swap leftover of an earlier attempt
-      deltaBatchSurvivors(spark, live.toString, tomb, idCol)
-        .write.mode("overwrite").parquet(next.toString)
-      fs.mkdirs(preRoot)
-      val pre = new Path(preRoot, s"batch=$b")
-      if (!fs.rename(live, pre))
-        sys.error(s"deltaLogDeleteIds: could not move $live aside")
-      if (!fs.rename(next, live))
-        sys.error(s"deltaLogDeleteIds: could not install $next — the " +
-          s"pre-delete batch is intact at $pre; restore it to delta/")
-      // a failed marker delete must raise: the completed batch would
-      // otherwise permanently lock out the log (reads refuse over it)
-      if (!fs.delete(pre, true))
-        sys.error(s"deltaLogDeleteIds: batch $b rewritten but the " +
-          s"superseded directory at $pre could not be deleted — " +
-          "delete it manually to unblock the log")
+      graft.operators.Commit.swap(fs, live, new Path(preRoot, s"batch=$b"),
+          new Path(s"$workDir/delta_deleting/batch=$b")) { next =>
+        deltaBatchSurvivors(spark, live.toString, tomb, idCol)
+          .write.mode("overwrite").parquet(next.toString)
+        fs.mkdirs(preRoot) // the move aside needs pre's parent
+      }(())
     }
     if (fs.exists(preRoot) && fs.listStatus(preRoot).isEmpty)
       fs.delete(preRoot, true)
@@ -1513,63 +1479,55 @@ object StreamingJobs {
     // rewrite of the whole index for zero rows would be all cost and
     // no state change. One limit-1 read, never a full delta pass.
     if (delta.isEmpty) return Nil
-    val absorbing = s"${indexPath}_absorbing"
-    fs.delete(new Path(absorbing), true) // pre-swap leftover: garbage
-    codec.save(graft.operators.Similarity.absorb(
-      codec.load(spark, indexPath), delta, twoLevelAssign, candidateGroups,
-      twoLevelAutoNlist, idCol, vecCol), absorbing)
-    // the manifest rides INSIDE the new index directory BEFORE any
-    // rename: it is what makes every later window's recovery decidable
-    val mf = fs.create(new Path(s"$absorbing/_absorbed_batches"), true)
-    try mf.write(batches.mkString("\n").getBytes("UTF-8"))
-    finally mf.close()
     val absRoot = new Path(s"$workDir/delta_absorbed")
-    fs.mkdirs(absRoot)
-    batches.foreach { b =>
-      if (!fs.rename(new Path(s"$deltaDir/batch=$b"),
-          new Path(absRoot, s"batch=$b")))
-        sys.error(s"$what: could not move $deltaDir/batch=$b aside — " +
-          s"restore any batches already under $absRoot to delta/ and " +
-          "retry")
+    graft.operators.Commit.swap(fs, new Path(indexPath), preAbs,
+        new Path(s"${indexPath}_absorbing")) { absorbing =>
+      codec.save(graft.operators.Similarity.absorb(
+        codec.load(spark, indexPath), delta, twoLevelAssign,
+        candidateGroups, twoLevelAutoNlist, idCol, vecCol),
+        absorbing.toString)
+      // the manifest rides INSIDE the new index directory BEFORE any
+      // rename: it is what makes every later window's recovery decidable
+      val mf = fs.create(new Path(absorbing, "_absorbed_batches"), true)
+      try mf.write(batches.mkString("\n").getBytes("UTF-8"))
+      finally mf.close()
+      fs.mkdirs(absRoot)
+      batches.foreach { b =>
+        if (!fs.rename(new Path(s"$deltaDir/batch=$b"),
+            new Path(absRoot, s"batch=$b")))
+          sys.error(s"$what: could not move $deltaDir/batch=$b aside — " +
+            s"restore any batches already under $absRoot to delta/ and " +
+            "retry")
+      }
+      // the zero-row schema-bearing placeholder lands IMMEDIATELY after
+      // the moves (keyed by the highest absorbed batch — committed, so a
+      // resumed stream never collides with it): from here on EVERY crash
+      // window leaves a log that reads fine once the markers are cleared
+      // — deltaLog stays readable between an absorb and the next append,
+      // exactly the guarantee the delete path's fully-tombstoned rewrite
+      // provides. Built from the schema, never the (already-moved) batch
+      // paths.
+      spark.createDataFrame(
+          new java.util.ArrayList[org.apache.spark.sql.Row](), delta.schema)
+        .write.mode("overwrite")
+        .parquet(s"$deltaDir/batch=${batches.max}")
+    } {
+      // sibling artifacts the save functions don't know about (e.g. the
+      // cellstats drift baseline, which must KEEP describing the BUILD's
+      // expectation — driftCheck prices drift against the build, not
+      // against the absorbed state) carry over into the installed index
+      // before the superseded directory is dropped
+      fs.listStatus(preAbs).foreach { st =>
+        val dest = new Path(indexPath, st.getPath.getName)
+        if (!fs.exists(dest) && !fs.rename(st.getPath, dest))
+          sys.error(s"$what: swap COMPLETED but the sibling artifact " +
+            s"${st.getPath.getName} could not be carried from $preAbs " +
+            s"into $indexPath — move it manually, then delete $preAbs " +
+            s"and $absRoot")
+      }
     }
-    // the zero-row schema-bearing placeholder lands IMMEDIATELY after
-    // the moves (keyed by the highest absorbed batch — committed, so a
-    // resumed stream never collides with it): from here on EVERY crash
-    // window leaves a log that reads fine once the markers are cleared
-    // — deltaLog stays readable between an absorb and the next append,
-    // exactly the guarantee the delete path's fully-tombstoned rewrite
-    // provides. Built from the schema, never the (already-moved) batch
-    // paths.
-    spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](), delta.schema)
-      .write.mode("overwrite")
-      .parquet(s"$deltaDir/batch=${batches.max}")
-    if (!fs.rename(new Path(indexPath), preAbs))
-      sys.error(s"$what: could not move $indexPath aside — the log " +
-        s"batches are under $absRoot; restore them to delta/ and drop " +
-        s"$absorbing to retry")
-    if (!fs.rename(new Path(absorbing), new Path(indexPath)))
-      sys.error(s"$what: could not install $absorbing — the previous " +
-        s"index is intact at $preAbs; restore it to $indexPath and the " +
-        s"$absRoot batches to delta/")
-    // sibling artifacts the save functions don't know about (e.g. the
-    // cellstats drift baseline, which must KEEP describing the BUILD's
-    // expectation — driftCheck prices drift against the build, not
-    // against the absorbed state) carry over into the installed index
-    // before the superseded directory is dropped
-    fs.listStatus(preAbs).foreach { st =>
-      val dest = new Path(indexPath, st.getPath.getName)
-      if (!fs.exists(dest) && !fs.rename(st.getPath, dest))
-        sys.error(s"$what: swap COMPLETED but the sibling artifact " +
-          s"${st.getPath.getName} could not be carried from $preAbs " +
-          s"into $indexPath — move it manually, then delete $preAbs " +
-          s"and $absRoot")
-    }
-    // swap complete: the two leftovers are superseded data — a failed
-    // delete must raise (reads stay locked out over delta_absorbed)
-    if (!fs.delete(preAbs, true))
-      sys.error(s"$what: swap COMPLETED but the superseded index at " +
-        s"$preAbs could not be deleted — delete it manually")
+    // swap complete: the absorbed batches are superseded data — a
+    // failed delete must raise (reads stay locked out over delta_absorbed)
     if (!fs.delete(absRoot, true))
       sys.error(s"$what: swap COMPLETED but the absorbed batches at " +
         s"$absRoot could not be deleted — delete them manually to " +

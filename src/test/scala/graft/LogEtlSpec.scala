@@ -104,6 +104,53 @@ class LogEtlSpec extends AnyFunSuite {
     LogEtl.compact(spark, in, out)
     LogEtl.compact(spark, in, out)
     assert(spark.read.parquet(out).count() == 201)
+    // the swap leaves no sibling of the day behind
+    val day = new java.io.File(out)
+    assert(day.getParentFile.listFiles
+      .filter(_.getName.startsWith(day.getName + ".__")).isEmpty)
+  }
+
+  test("a compact that fails over an existing day keeps the previous day readable") {
+    val in = tmpDir(); val root = tmpDir()
+    val d = LocalDate.of(2024, 7, 1)
+    val dest = LogEtl.destPath(root, "b1", d, hiveLayout = false)
+    Files.write(java.nio.file.Paths.get(s"$in/part0.txt"),
+      lines.mkString("\n").getBytes)
+    LogEtl.compact(spark, in, dest)
+    def dayIntact(): Unit = {
+      assert(LogTable.read(spark, root, "b1", d, d).count() == 201)
+      assert(!new java.io.File(s"$dest.__next").exists() &&
+        !new java.io.File(s"$dest.__pre").exists())
+    }
+    // a re-run over a truncated gzip fails in its scan
+    val bad = tmpDir()
+    val gz = new java.io.ByteArrayOutputStream()
+    val z = new java.util.zip.GZIPOutputStream(gz)
+    try z.write(lines.mkString("\n").getBytes) finally z.close()
+    Files.write(java.nio.file.Paths.get(s"$bad/part0.txt.gz"),
+      gz.toByteArray.take(gz.size / 2))
+    intercept[Exception](LogEtl.compact(spark, bad, dest))
+    dayIntact()
+    // a re-run whose write stage fails: every task commit loses its
+    // rename (the window a bare overwrite has already deleted the day in)
+    val conf = spark.sparkContext.hadoopConfiguration
+    FaultyFs.register(conf)
+    conf.set(FaultyFs.FailRename, "attempt_.*|part-.*")
+    try intercept[Exception](LogEtl.compact(spark, in, s"faulty://$dest"))
+    finally conf.unset(FaultyFs.FailRename)
+    dayIntact()
+  }
+
+  test("a leftover <day>.__pre makes compact refuse, naming it") {
+    val in = tmpDir(); val out = tmpDir()
+    Files.write(java.nio.file.Paths.get(s"$in/part0.txt"),
+      lines.mkString("\n").getBytes)
+    LogEtl.compact(spark, in, out)
+    Files.createDirectories(java.nio.file.Paths.get(s"$out.__pre"))
+    val e = intercept[IllegalArgumentException](LogEtl.compact(spark, in, out))
+    assert(e.getMessage.contains(s"$out.__pre"), e.getMessage)
+    assert(spark.read.parquet(out).count() == 201)
+    Files.delete(java.nio.file.Paths.get(s"$out.__pre"))
   }
 
   test("compact writes exactly LogTable.outputSchema into every footer, fused and unfused") {

@@ -5,19 +5,6 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.multimodal.Multimodal
 
-/** The local filesystem under the test-only `faultydel` scheme, whose
-  * delete of a `*.__pre` directory reports failure and deletes nothing
-  * — the silent-failure window of a rename-swap's last step.
-  */
-class FailingPreDeleteFs extends org.apache.hadoop.fs.FilterFileSystem(
-    new org.apache.hadoop.fs.RawLocalFileSystem {
-      override def getUri: java.net.URI = java.net.URI.create("faultydel:///")
-    }) {
-  override def delete(f: org.apache.hadoop.fs.Path,
-                      recursive: Boolean): Boolean =
-    if (f.getName.endsWith(".__pre")) false else super.delete(f, recursive)
-}
-
 class MultimodalSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
@@ -352,10 +339,10 @@ class MultimodalSpec extends AnyFunSuite {
   test("deleteFromHammingRegistry: a failed delete of the superseded registry raises, naming it, with the new registry live") {
     import graft.operators.Dedup
     val conf = spark.sparkContext.hadoopConfiguration
-    conf.set("fs.faultydel.impl", classOf[FailingPreDeleteFs].getName)
-    conf.setBoolean("fs.faultydel.impl.disable.cache", true)
+    FaultyFs.register(conf)
+    conf.set(FaultyFs.FailDelete, """.*\.__pre""")
     val work = java.nio.file.Files.createTempDirectory("graft-mm08f").toString
-    val reg = s"faultydel://$work/reg"
+    val reg = s"faulty://$work/reg"
     val hashes = Multimodal.dHashes(Multimodal.syntheticAssets(spark, 30))
       .toDF().cache()
     Dedup.writeHammingRegistry(hashes, "asset_id", "dhash",
@@ -369,6 +356,7 @@ class MultimodalSpec extends AnyFunSuite {
       hashes.filter($"asset_id" % 2 =!= 0).count() * 4,
       "the swapped-in registry is not the live table")
     spark.sql("DROP TABLE IF EXISTS graft_t_mm08f")
+    conf.unset(FaultyFs.FailDelete)
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(work))
   }
 }
